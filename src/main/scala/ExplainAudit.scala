@@ -5,14 +5,7 @@
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val dir = "/root/testdata/sf0.01"
     val names = Seq(
       "p3_mask_filter", "p5_key_lookup", "v4_triplet_join", "j5_radius_join",
@@ -40,9 +33,11 @@ object ExplainAudit {
       "ivm8_distinct_view", "ivm8b_mv_distinct", "ivm4_join_view")
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan evidence for flagship queries\n\n")
-    sb.append("Generated by `sbt \"runMain ExplainAudit\"` at sf0.01 (8 shuffle\n")
-    sb.append("partitions, AQE on). Interesting lines only: scans (pushdown +\n")
-    sb.append("read schema), joins, exchanges, aggregates.\n")
+    sb.append("Generated by `sbt \"runMain ExplainAudit\"` at sf0.01 in the bench\n")
+    sb.append("session (graft.Session: " +
+      s"${spark.conf.get("spark.sql.shuffle.partitions")} shuffle partitions, AQE on,\n")
+    sb.append("scan fan-out on). Interesting lines only: scans (pushdown + read\n")
+    sb.append("schema), joins, exchanges, aggregates.\n")
     for (name <- names) {
       sb.append(s"\n## $name\n\n```\n")
       val plan = graft.SparkEntry.queries(name)(spark, dir)

@@ -1,44 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Dead-session scratch orphans are deleted DIRECTLY (they are dead
     // files, not GC-pending references — the r14 sweep died at rc 124
     // GC-spinning on 31 GB of exactly this), then the surviving dirs are
     // marked foreign so settle only ever gauges THIS session's debris.
     // Must run before the SparkSession exists. SPARK_GRAFT_PURGE=0 skips
     // the purge (concurrent-session paranoia; staleness already guards).
-    if (sys.env.getOrElse("SPARK_GRAFT_PURGE", "1") == "1") {
-      val freed = graft.tools.Reclaim.purgeOrphans()
-      if (freed > 0)
-        System.err.println(f"# purged ${freed / 1e9}%.1f GB orphaned scratch")
-    }
-    graft.tools.Reclaim.markForeign()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions) // kernels + IntervalJoinStrategy
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The driver test files are single-row-group parquet — unsplittable,
-      // so scan-stage compute would run in ONE task without this (see
-      // Tables.fanout). At deployment scale input splits make this
-      // unnecessary; it is bench-harness sizing, not engine semantics.
-      .config("graft.scan.fanout", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.tools.Reclaim.beforeSession(
+      purge = sys.env.getOrElse("SPARK_GRAFT_PURGE", "1") == "1")
+    val spark = Session.local()
+    // stderr, never stdout: stdout carries only the result JSON lines
+    def warn(what: String, e: Throwable): Unit =
+      System.err.println(s"# $what ${e.getClass.getSimpleName}: ${e.getMessage}")
     // Warm the session (shuffle machinery, codegen, parquet footers) so
     // the first timed query doesn't absorb one-time JVM startup cost, and
     // touch every bench table once so footer reads + OS page cache aren't
     // charged to whichever query alphabetically happens to scan it first.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count()
+    catch { case NonFatal(e) => warn("session warm-up failed", e) }
     graft.Tables.names.foreach { t =>
       try graft.Tables(spark, sfDir, t).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => warn(s"touching table $t failed", e) }
     }
     def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     // Fixed (name-sorted) query order so per-round timings are comparable.
@@ -86,7 +71,10 @@ object Bench {
         def run(): Double = {
           val t0 = System.nanoTime()
           try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => return Double.NaN }
+          catch { case NonFatal(e) =>
+            warn(s"sentinel $n failed", e)
+            return Double.NaN
+          }
           (System.nanoTime() - t0) / 1e9
         }
         run() // warm-up, unrecorded
@@ -143,7 +131,7 @@ object Bench {
       try spark.catalog.listTables().collect()
         .filter(_.name.startsWith("graft_trade_edges_b"))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => warn("dropping staged tables failed", e) }
       settleIfLarge()
     }
     // Trigger/drain split (round-14 campaign measurement): dd2's sf100
@@ -174,10 +162,10 @@ object Bench {
       val warmDt = if (!warmup) -1.0 else {
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Exception =>
+        catch { case NonFatal(e) =>
           // visible, not swallowed — a warm-up failure usually predicts
           // the timed reps failing too (fatal Errors propagate)
-          System.err.println(s"# $name: WARMUP FAILED ${e.getClass.getSimpleName}")
+          warn(s"$name: WARMUP FAILED", e)
         }
         // timestamp BEFORE the cache clear + GC: the recorded figure is
         // the query's first-touch cost, not the housekeeping after it
@@ -197,7 +185,7 @@ object Bench {
         // materializing output.
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
+          catch { case NonFatal(e) => warn(s"$name: FAILED", e); false }
         val dt = (System.nanoTime() - t0) / 1e9
         // Operators that cache intermediates (dedup cliques) would otherwise
         // leave them resident and skew every later query's timing via memory
@@ -257,7 +245,7 @@ object Bench {
     // when the normalized change is both >0.3 s and >1.25× — the verdict
     // reads regressions off this table instead of re-adjudicating.
     val prevTxt = try Some(scala.io.Source.fromFile("bench_prev.json").mkString)
-      catch { case _: Throwable => None }
+      catch { case NonFatal(e) => warn("no previous sweep to diff", e); None }
     val prevScale = prevTxt.flatMap(t =>
       """"sentinel_scale":([0-9.]+)""".r.findFirstMatchIn(t).map(_.group(1).toDouble))
       .getOrElse(1.0)
@@ -304,7 +292,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter("bench_full.json")
       try w.println(fullLine) finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) => warn("writing bench_full.json failed", e) }
     println(fullLine)
     val headline = Seq(
       "tpch_q1", "tpch_q3", "tpch_q6", "v4_triplet_join", "v1_voxelize",

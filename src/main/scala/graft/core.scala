@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import scala.util.control.NonFatal
 
 /** One named operator query: the Spark implementation plus (where the
   * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle query
@@ -35,8 +36,8 @@ object Tables {
     *
     * SIZE-GATED (round 15, optimization guide §2.4 "remove shuffles
     * outright"): fan-out exists to parallelize heavy per-row compute over
-    * an unsplittable file, and a table below `graft.scan.fanout.minBytes`
-    * (default 512 KB) holds less work than its round-robin exchange costs
+    * an unsplittable file, and a table below [[FanoutMinBytes]]
+    * (512 KB) holds less work than its round-robin exchange costs
     * — every keyless repartition also pays a local sort of its input
     * (spark.sql.execution.sortBeforeRepartition) plus one AQE stage
     * boundary per read. At sf0.1 the gate exempts the five dimension
@@ -63,11 +64,11 @@ object Tables {
       stat: (Long, Long)): DataFrame = {
     val n = try spark.conf.get("graft.scan.fanout", "0").toInt
     catch { case _: NumberFormatException => 0 }
-    val minBytes = try spark.conf.get("graft.scan.fanout.minBytes", "524288").toLong
-    catch { case _: NumberFormatException => 524288L }
     val (bytes, files) = stat
-    if (n > 0 && bytes >= minBytes && files < n) df.repartition(n) else df
+    if (n > 0 && bytes >= FanoutMinBytes && files < n) df.repartition(n) else df
   }
+
+  private[graft] val FanoutMinBytes: Long = 512L << 10
 
   /** (total bytes, file count) of a table path, via the Hadoop
     * FileSystem API so the fan-out gate is real on ANY scheme (local,
@@ -87,7 +88,10 @@ object Tables {
         val cs = fs.getContentSummary(p)
         (cs.getLength, cs.getFileCount)
       } else (Long.MaxValue, 1L)
-    } catch { case _: Throwable => (Long.MaxValue, 1L) }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"# input stat of $path failed, fan-out fails open: $e")
+      (Long.MaxValue, 1L)
+    }
 
   private[graft] def inputBytes(spark: SparkSession, path: String): Long =
     inputStat(spark, path)._1
@@ -121,7 +125,9 @@ object EventTs {
     */
   def enableLegacyNanos(spark: SparkSession): Unit =
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) =>
+      System.err.println(s"# legacy nanos read path unavailable: $e")
+    }
 
   /** Batch-probe the parquet schema of `path` (file or staged stream
     * directory) — streaming sources need an explicit schema, and only

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * The reference's entire output path is a parquet write
   * (`dlmerged2parquet.py:289-291`); until round 4 the K1/K2 sinks were
-  * only spec-verified (SourcesSpec, PipelineDemo, TrainingPrepSpec). This
+  * only spec-verified (SourcesSpec, PipelineSpec, TrainingPrepSpec;
+  * COVERAGE.md §2.2). This
   * query makes the write itself driver-gated: export `documents`
   * partitioned by `lang` with gzip compression to a fresh temp dir, read
   * it back, and emit one row per partition key carrying a count, id/char

@@ -264,7 +264,8 @@ case class IntervalJoinExec(
 /** User-facing API: `IntervalJoin.join(left, right, "user_id", "user_id",
   * "pts", "ets", lo, hi)` — requires [[IntervalJoinStrategy]] in the
   * session (register once at session setup via [[GraftExtensions]]:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * [[graft.Session]]`.local()`, `.withExtensions(new GraftExtensions)` on
+  * any other builder, or
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`; without it
   * planning fails with "No plan for IntervalJoinPlan").
   */

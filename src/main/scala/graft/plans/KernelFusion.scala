@@ -124,7 +124,8 @@ object KernelFusionRule extends Rule[LogicalPlan] {
 
 /** Session extensions: inject the fusion rule and register the tensor /
   * vector SQL functions. Usage:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * [[graft.Session]]`.local()`, `.withExtensions(new GraftExtensions)` on
+  * any other builder, or
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -64,7 +64,8 @@ object DedupOps extends OpModule {
     * de-synchronize candidate sets). Chunking bounds MEMORY per task, but
     * a bucket's pair count is inherently quadratic — n = 8192 is ~3.4e7
     * pairs, roughly the entire over-cap pair population measured at sf10
-    * (26M across 18 buckets, max bucket 2474; tools/BucketDist). Buckets
+    * (26M across 18 buckets, max bucket 2474; SCALING.md §bucket-cap
+    * recall recovered, round 12). Buckets
     * beyond the hard cap are degenerate template floods, not dup
     * families, and are surfaced by [[minhashDroppedBuckets]], the dd2 leg
     * of the no-silent-caps posture (simhash/dd9/er1 each have their own).
@@ -253,7 +254,8 @@ object DedupOps extends OpModule {
     * as input. Split out so probes can measure the candidate work unit
     * without the |pairs| × sig_bytes attachment shuffle (deployment-
     * trivial — ~70 MB per executor at sf100 across 1000 nodes — but
-    * beyond a SINGLE node's disk; `tools/PairCount candidates`).
+    * beyond a SINGLE node's disk; the candidate counts are in SCALING.md
+    * §three-decade watchlist, round 13).
     */
   private[graft] def repCandidates(cliques: DataFrame, minBands: Int,
       expandCap: Int = MinhashBucketCap, hardCap: Int = MinhashBucketHardCap,

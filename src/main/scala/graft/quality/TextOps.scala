@@ -61,8 +61,8 @@ object TextOps extends OpModule {
     * global sort ABOVE this projection runs the whole k-gram/window
     * pipeline TWICE, because RangePartitioning's bounds-sampling pass
     * executes the sort's child — measured at sf10 as two ~1,550
-    * executor-second stages for one answer (QueryStageProfile, SCALING
-    * §x5). Sorting the raw rows first costs one text-sized exchange and
+    * executor-second stages for one answer (stage profile in SCALING.md
+    * §sf10 second decade, x5). Sorting the raw rows first costs one text-sized exchange and
     * computes the expensive projection exactly once, order preserved
     * (a per-row projection never reorders).
     */

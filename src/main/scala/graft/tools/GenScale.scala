@@ -50,14 +50,7 @@ object GenScale {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("testdata/sf1.0")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = 32
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-genscale").getOrCreate()
+    val spark = graft.Session.local()
     try generate(spark, src, out, copies)
     finally spark.stop()
   }

@@ -104,6 +104,19 @@ object Reclaim {
     freed
   }
 
+  /** Session-start hygiene (Bench, Probe): [[purgeOrphans]] unless
+    * `purge` is off, then [[markForeign]]. Call before the SparkSession
+    * exists.
+    */
+  def beforeSession(purge: Boolean = true): Unit = {
+    if (purge) {
+      val freed = purgeOrphans()
+      if (freed > 0)
+        System.err.println(f"# purged ${freed / 1e9}%.1f GB orphaned scratch")
+    }
+    markForeign()
+  }
+
   /** GC, then wait (bounded) for the ContextCleaner to drain shuffle
     * debris below `floorBytes`. Returns the debris remaining. GC is
     * re-issued each poll: reference processing is multi-cycle (a

@@ -31,7 +31,7 @@ import graft.Tables
   * its copies stay genuine near-dups. The construction therefore PLANTS
   * a cross-copy duplicate population (measured at sf10: 1.47 M of
   * 11.4 M dd2 pairs cross shards, median TRUE token-set Jaccard 0.70 vs
-  * the 0.33 background — `CrossShardProbe`), so "zero cross-shard
+  * the 0.33 background — SCALING.md §sf10 shard parity), so "zero cross-shard
   * pairs" is the WRONG invariant. What does hold, and is asserted:
   *   - CROSS-SHARD PAIRS ARE SIGNAL: every cross-shard pair's true
   *     token-set Jaccard exceeds the 1/3 cross-copy background — none
@@ -67,18 +67,7 @@ object ShardParity {
   def main(args: Array[String]): Unit = {
     val sf1 = args.lift(0).getOrElse("testdata/sf1.0")
     val sf10 = args.lift(1).getOrElse("testdata/sf10")
-    val cpus = 32
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("graft.scan.fanout", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-shard-parity").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     try {
       run(spark, sf1, sf10)
       if (failures > 0) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-JVM writer for the cross-process store-concurrency test
   * (DedupSpec "two JVMs"): stages a small deterministic snapshot into
   * the fingerprint store at `args(0)` with identity `args(1)` and
@@ -18,12 +16,7 @@ import org.apache.spark.sql.SparkSession
 object StoreRaceProbe {
   def main(args: Array[String]): Unit = {
     val Array(path, identity, suffix) = args.take(3)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-store-race-$identity").getOrCreate()
+    val spark = graft.Session.local(cores = 2)
     try {
       import spark.implicits._
       val docs = (0 until 24).map(i =>

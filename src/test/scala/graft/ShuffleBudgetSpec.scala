@@ -4,8 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The shuffle-budget regression net: every SparkEntry query's INITIAL
   * physical plan is pinned to its current shuffle-exchange count
-  * (measured by `runMain ShuffleCount` at sf0.001 — broadcast exchanges
-  * excluded, they are the cheap alternative these budgets push toward).
+  * (measured by `runMain graft.tools.Probe shuffles all <sf0.001 dir>`,
+  * whose counter `Probe.shuffleExchanges` this spec calls — broadcast
+  * exchanges excluded, they are the cheap alternative these budgets push
+  * toward).
   * A query whose plan silently gains an Exchange — a stats change
   * flipping a broadcast to a shuffle join, a new non-prefix sort, an
   * accidental repartition — fails here long before it shows up as a
@@ -426,8 +428,7 @@ class ShuffleBudgetSpec extends AnyFunSuite with SparkSuite {
 
   test("no query's plan exceeds its recorded shuffle-exchange budget") {
     val over = SparkEntry.all.filterNot(q => exempt(q.name)).flatMap { q =>
-      val plan = q.fn(spark, sf).queryExecution.executedPlan.toString
-      val shuffles = "(?m)^\\s*[+:|\\- ]*Exchange ".r.findAllIn(plan).size
+      val shuffles = graft.tools.Probe.shuffleExchanges(q.fn(spark, sf))
       val budget = budgets.getOrElse(q.name, 0)
       if (shuffles > budget) Some(s"${q.name}: $shuffles > $budget") else None
     }

@@ -2,20 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local session for specs (one JVM-wide session; getOrCreate
-  * makes every suite reuse it).
+/** Shared local session for specs: the [[Session]] configuration at a
+  * fixed 4 cores (one JVM-wide session; getOrCreate makes every suite
+  * reuse it).
   */
 trait SparkSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .withExtensions(new graft.plans.GraftExtensions) // kernels + IntervalJoinStrategy
+  lazy val spark: SparkSession = Session.builder(cores = 4)
     .config("spark.sql.warehouse.dir",
       s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"

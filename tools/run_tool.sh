@@ -3,7 +3,7 @@
 # Usage: tools/run_tool.sh [-Xmx...] <mainClass> [args...]
 set -euo pipefail
 cd "$(dirname "$0")/.."
-XMX="-Xmx64g"
+XMX="-Xmx${SPARK_DRIVER_MEM:-4g}"
 if [[ "${1:-}" == -Xmx* ]]; then XMX="$1"; shift; fi
 exec java $XMX \
   --add-opens java.base/java.lang=ALL-UNNAMED \
