@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.tensor.TensorFunctions
+import graft.tensor.VoxelComponents
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,24 +15,27 @@ import org.apache.spark.sql.functions._
 object EventPipelines {
 
   /** Long-form view of the spacepoint table: one row per point, via the
-    * tensor_explode generator, keeping parallel label columns positionally
-    * aligned by a single shared explode (SURVEY.md §7.4: never explode
-    * parallel arrays independently).
+    * tensor_explode generator, with the per-point label arrays passed
+    * INTO the generator as aligned arrays, so they come out as scalars
+    * positionally aligned with the points (SURVEY.md §7.4: never explode
+    * parallel arrays independently) and no exploded row carries a copy
+    * of a whole label array.
     */
-  def spacepointsLong(spark: SparkSession, events: DataFrame): DataFrame = {
-    TensorFunctions.register(spark)
-    events.createOrReplaceTempView("sp_events")
-    spark.sql(
-      """SELECT run, subrun, event, t.idx AS pt,
-        |  element_at(t.slice, 1) AS x, element_at(t.slice, 2) AS y,
-        |  element_at(t.slice, 3) AS z, element_at(t.slice, 4) AS charge,
-        |  element_at(truetriplet_t, t.idx + 1) AS truetriplet,
-        |  element_at(segment_t, t.idx + 1) AS segment,
-        |  element_at(instance_t, t.idx + 1) AS instance
-        |FROM sp_events
-        |LATERAL VIEW tensor_explode(spacepoint_t, spacepoint_t_shape) t AS idx, slice
-        |""".stripMargin)
-  }
+  def spacepointsLong(spark: SparkSession, events: DataFrame): DataFrame =
+    pointsLong(events, Seq("truetriplet", "segment", "instance"))
+
+  /** [[spacepointsLong]] with only the given labels (each `<label>_t`):
+    * an aligned array is read for every point, so a pipeline passes just
+    * the labels it uses.
+    */
+  private def pointsLong(events: DataFrame, labels: Seq[String]): DataFrame =
+    events.selectExpr("run", "subrun", "event",
+      s"tensor_explode(spacepoint_t, spacepoint_t_shape, ${labels.map(_ + "_t").mkString(", ")}) " +
+        s"AS (pt, slice, ${labels.mkString(", ")})")
+      .select(Seq(col("run"), col("subrun"), col("event"), col("pt"),
+        element_at(col("slice"), 1).as("x"), element_at(col("slice"), 2).as("y"),
+        element_at(col("slice"), 3).as("z"), element_at(col("slice"), 4).as("charge")) ++
+        labels.map(col): _*)
 
   /** V1 voxelization: bin spacepoints to integer voxel coords at
     * `voxelSizeCm`, keep only true (non-ghost) points, aggregate charge
@@ -41,7 +44,7 @@ object EventPipelines {
     * voxel_to_instance_data.py:63).
     */
   def voxelize(spark: SparkSession, events: DataFrame, voxelSizeCm: Double): DataFrame = {
-    val long = spacepointsLong(spark, events)
+    val long = pointsLong(events, Seq("truetriplet", "segment"))
       .filter(col("truetriplet") === 1)
       .withColumn("vx", floor(col("x") / voxelSizeCm))
       .withColumn("vy", floor((col("y") + 117.0) / voxelSizeCm))
@@ -61,28 +64,22 @@ object EventPipelines {
 
   /** Shared long view of a voxel event table: one row per non-ghost
     * voxel, integer grid coords (ix, iy, iz) for adjacency plus the
-    * shifted output doubles (y − 117), the ssnet label, and the
-    * as-given instance label.
+    * shifted output doubles (y − 117), the ssnet label, and `instance`,
+    * read from the per-voxel array the SQL expression `instances` yields.
     */
-  private def voxelLong(spark: SparkSession, voxels: DataFrame): DataFrame = {
-    TensorFunctions.register(spark)
-    voxels.createOrReplaceTempView("vox_events")
-    spark.sql(
-      """SELECT run, subrun, event, t.idx AS i,
-        |  element_at(t.slice, 1) AS ix,
-        |  element_at(t.slice, 2) AS iy,
-        |  element_at(t.slice, 3) AS iz,
-        |  CAST(element_at(t.slice, 1) AS DOUBLE) AS x,
-        |  CAST(element_at(t.slice, 2) AS DOUBLE) - 117.0 AS y,
-        |  CAST(element_at(t.slice, 3) AS DOUBLE) AS z,
-        |  element_at(voxlabel, t.idx + 1) AS voxlabel,
-        |  element_at(voxssnet, t.idx + 1) AS ssnet,
-        |  element_at(voxinstance, t.idx + 1) AS instance
-        |FROM vox_events
-        |LATERAL VIEW tensor_explode(voxcoord, voxcoord_shape) t AS idx, slice
-        |""".stripMargin)
+  private def voxelLong(voxels: DataFrame, instances: String): DataFrame =
+    voxels.selectExpr("run", "subrun", "event",
+      s"tensor_explode(voxcoord, voxcoord_shape, voxlabel, voxssnet, $instances) " +
+        "AS (i, slice, voxlabel, ssnet, instance)")
       .filter(col("voxlabel") === 1)
-  }
+      .select(col("run"), col("subrun"), col("event"), col("i"),
+        element_at(col("slice"), 1).as("ix"),
+        element_at(col("slice"), 2).as("iy"),
+        element_at(col("slice"), 3).as("iz"),
+        element_at(col("slice"), 1).cast("double").as("x"),
+        (element_at(col("slice"), 2).cast("double") - 117.0).as("y"),
+        element_at(col("slice"), 3).cast("double").as("z"),
+        col("voxlabel"), col("ssnet"), col("instance"))
 
   /** The §3.3 aggregation grain over a long voxel view carrying an
     * `instance` column (given labels for [[instanceTable]], CC-derived
@@ -114,69 +111,45 @@ object EventPipelines {
     * lowest), member coords re-encoded in the flatten+shape convention.
     */
   def instanceTable(spark: SparkSession, voxels: DataFrame): DataFrame =
-    aggregateInstances(voxelLong(spark, voxels))
+    aggregateInstances(voxelLong(voxels, "voxinstance"))
 
   /** §3.3 with the reference's FLOOD-FILL instance grain: when the voxel
     * table carries no trusted instance labels, the instance id is
     * DERIVED by 6-neighborhood connected components over each event's
-    * occupancy grid — the reference's dense-array flood fill
+    * non-ghost voxels — the reference's per-event dense-array flood fill
     * (voxel_to_instance_data.py's cluster step, larmatch instance
-    * grain) re-expressed as v7's sparse machinery
-    * ([[graft.ops.GraphOps.connectedComponents]]).
+    * grain). Components never cross an event, and an event is one row,
+    * so they are found inside the row by
+    * [[graft.tensor.VoxelComponents]] (`voxel_components`, an in-memory
+    * union-find) and ride the explode as an aligned array; finding them
+    * takes no join, shuffle, checkpoint or iteration.
     *
-    * Voxel coords pack into ONE BIGINT node id
-    * (event-index ≪ 33 | ix ≪ 22 | iy ≪ 11 | iz; each coord < 2048 —
-    * the detector box is 256×234×1036 at 1 cm, FIXTURES.md §A2, and
-    * the packing is checked). Because the packing is affine, the
-    * +1-in-one-axis neighbor is `id + 2^22 / 2^11 / 1`, so adjacency
-    * is three self equi-joins on a single LONG key — no composite-key
-    * or distance join anywhere, occupied cells only. The event-index
-    * comes from a row_number over the DISTINCT (run, subrun, event)
-    * set — event-metadata cardinality, never voxels, the ev6
-    * calendar-window posture. Derived instance id = the component's
-    * minimum packed id (deterministic under shuffle); isolated voxels
-    * label themselves. Downstream is [[instanceTable]]'s own
-    * aggregation applied to the derived grain.
+    * Instance id = event-index · 2^33 + the component's smallest packed
+    * in-event id (ix · 2^22 + iy · 2^11 + iz; each coord < 2047 — the
+    * detector box is 256×234×1036 at 1 cm, FIXTURES.md §A2, and the
+    * packing is checked), i.e. the minimum of the global packed ids
+    * (event-index ≪ 33 | ix ≪ 22 | iy ≪ 11 | iz) in the component;
+    * isolated voxels label themselves. The event-index comes from a
+    * row_number over the DISTINCT (run, subrun, event) set —
+    * event-metadata cardinality, never voxels, the ev6 calendar-window
+    * posture. Downstream is [[instanceTable]]'s own aggregation applied
+    * to the derived grain.
     */
   def instanceTableCC(spark: SparkSession, voxels: DataFrame): DataFrame = {
-    val long = voxelLong(spark, voxels)
+    val long = voxelLong(voxels, "voxel_components(voxcoord, voxcoord_shape, voxlabel)")
     val evs = long.select("run", "subrun", "event").distinct()
       .withColumn("evi",
         row_number().over(Window.orderBy("run", "subrun", "event")).cast("long"))
-    // Coords must stay ≤ 2046: at 2047 the +1-neighbor id would CARRY
-    // into the next packed field (z=2047 → y+1, y=2047 → x+1, x=2047 →
-    // next event) and the affine-shift join would fabricate adjacency
-    // between non-neighboring cells. Rejecting ≥ 2047 keeps every
-    // +1 probe inside its own field — the probe id may name a cell
-    // that cannot exist (coord 2047), which simply matches nothing.
-    val withId = long.join(broadcast(evs), Seq("run", "subrun", "event"))
-      .withColumn("id", when(
-        col("ix") < 0 || col("ix") >= 2047 || col("iy") < 0 || col("iy") >= 2047 ||
-          col("iz") < 0 || col("iz") >= 2047,
+    // Coords must stay ≤ 2046: at 2047 a +1 neighbor no longer fits its
+    // 11-bit field. voxel_components leaves such voxels unlabelled, and
+    // this guard fails the query on them.
+    val outside = Seq("ix", "iy", "iz")
+      .map(c => col(c) < 0 || col(c) >= VoxelComponents.Limit).reduce(_ || _)
+    val derived = long.join(broadcast(evs), Seq("run", "subrun", "event"))
+      .withColumn("instance", when(outside,
         expr("raise_error('voxel coord outside packable range [0, 2047)')").cast("long"))
-        .otherwise(expr("evi * 8589934592L + ix * 4194304L + iy * 2048L + iz")))
-    val nodes = withId.select("id").localCheckpoint(true)
-    val edges = Seq(1L << 22, 1L << 11, 1L).map { s =>
-      nodes.as("x")
-        .join(nodes.select(col("id").as("nid")), col("nid") === col("id") + s)
-        .select(col("id").as("a"), col("nid").as("b"))
-    }.reduce(_ union _)
-    // 30 pointer-jumping rounds reach diameter 2^31 — beyond any chain
-    // the 2047³ grid can hold — and earlyStop exits at ACTUAL
-    // convergence, so the ceiling costs nothing on real data;
-    // connectedComponents now THROWS if an earlyStop budget is
-    // exhausted unconverged, so a snaking track can split silently
-    // nowhere (the CC scaladoc's clique assumption does not hold for
-    // occupancy chains — this caller is the worst case)
-    // dedupe=false: the three affine-shift self equi-joins emit each
-    // directed pair at most once (distinct shift deltas cannot produce
-    // the same (a, b) twice), and duplicates would be harmless to
-    // min-propagation anyway — the edge-list distinct is pure cost here
-    val comp = graft.ops.GraphOps.connectedComponents(edges, maxIter = 30,
-      dedupe = false)
-    val derived = withId.join(comp, Seq("id"), "left")
-      .withColumn("instance", coalesce(col("comp"), col("id")))
-    aggregateInstances(derived.drop("id", "comp", "evi"))
+        .otherwise(col("evi") * 8589934592L + col("instance")))
+    aggregateInstances(derived.drop("evi"))
   }
 
   /** V4 triplet formation analog: three per-plane hit tables joined on

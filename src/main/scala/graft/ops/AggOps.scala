@@ -382,10 +382,10 @@ object AggOps extends OpModule {
         |  min(iy) AS min_iy, max(iy) AS max_iy
         |FROM lab GROUP BY comp ORDER BY instance""".stripMargin),
       (s, dir) => {
-        // Packed SINGLE-COLUMN ids BEFORE the distinct/checkpoint (the
-        // v8 instanceTableCC posture, applied here after the round-12
-        // stage profile): every downstream consumer — both shift joins,
-        // each CC round, the final label join — re-reads this set, and
+        // Packed SINGLE-COLUMN ids BEFORE the distinct/checkpoint
+        // (applied after the round-12 stage profile): every downstream
+        // consumer — both shift joins, each CC round, the final label
+        // join — re-reads this set, and
         // carrying (ix, iy) beside id tripled the checkpoint (5.4 GB at
         // sf10) and every exchange built from it; the packing is
         // bijective under the guard, so the coordinates re-derive from
@@ -483,10 +483,11 @@ object AggOps extends OpModule {
       }),
 
     // v8 — the §3.3 FLOOD-FILL grain, driver-oracled (VERDICT r8 #6):
-    // instanceTableCC's full path — tensor-format voxel events → packed
-    // single-BIGINT ids → three id+2^k self equi-joins → CC → majority-
-    // vote instance aggregation — over a fixture voxel table derived
-    // from a FIXED absolute lineitem slice (l_orderkey < 1000, present
+    // instanceTableCC's full path — tensor-format voxel events → per-event
+    // union-find inside each row (voxel_components) → packed single-BIGINT
+    // instance ids → majority-vote instance aggregation — over a fixture
+    // voxel table derived from a FIXED absolute lineitem slice
+    // (l_orderkey < 1000, present
     // and identical at every SF, the dd3 bounded-block posture: the CC
     // grain itself is SF-exercised by v7/dd6; this row pins the §3.3
     // packing + derived-grain semantics against an independent

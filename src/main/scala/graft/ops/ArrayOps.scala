@@ -75,19 +75,16 @@ object ArrayOps extends OpModule {
         |FROM embeddings, range(5) r1(i), range(4) r2(j), range(3) r3(k)
         |WHERE vec_id < 100
         |ORDER BY vec_id, i, j, k""".stripMargin),
-      (s, dir) => {
-        graft.tensor.TensorFunctions.register(s)
-        Tables(s, dir, "embeddings")
-          .filter(col("vec_id") < 100)
-          .select(col("vec_id"),
-            expr("tensor_reshape(slice(embedding, 1, 60), array(5L, 4L, 3L))").as("t"))
-          .select(col("vec_id"), posexplode(col("t")))
-          .select(col("vec_id"), col("pos").cast("long").as("i"), posexplode(col("col")))
-          .select(col("vec_id"), col("i"), col("pos").cast("long").as("j"), posexplode(col("col")))
-          .select(col("vec_id"), col("i"), col("j"),
-            col("pos").cast("long").as("k"), col("col").as("val"))
-          .orderBy("vec_id", "i", "j", "k")
-      }),
+      (s, dir) => Tables(s, dir, "embeddings")
+        .filter(col("vec_id") < 100)
+        .select(col("vec_id"),
+          expr("tensor_reshape(slice(embedding, 1, 60), array(5L, 4L, 3L))").as("t"))
+        .select(col("vec_id"), posexplode(col("t")))
+        .select(col("vec_id"), col("pos").cast("long").as("i"), posexplode(col("col")))
+        .select(col("vec_id"), col("i"), col("pos").cast("long").as("j"), posexplode(col("col")))
+        .select(col("vec_id"), col("i"), col("j"),
+          col("pos").cast("long").as("k"), col("col").as("val"))
+        .orderBy("vec_id", "i", "j", "k")),
 
     // T7 — vector norm via a no-shuffle higher-order fold. Both engines
     // run the same left-to-right double fold over the array (DuckDB's

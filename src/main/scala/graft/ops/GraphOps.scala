@@ -30,7 +30,7 @@ object GraphOps extends OpModule {
     * 23.8, inside its noise band). So the level is a per-CALL choice:
     * deserialized by default (every sf≤10 shape keeps its r13 plan and
     * cost), serialized where the caller knows the working set threatens
-    * the heap (v7/v8 gate on the scanned corpus size — the sf100
+    * the heap (v7 gates on the scanned corpus size — the sf100
     * regime, where survival beats the ser tax). The carried size
     * ESTIMATE (load-bearing for each round's broadcast decision, see
     * the revert note below) is storage-level independent.
@@ -70,7 +70,7 @@ object GraphOps extends OpModule {
     *   min over a multiset ignores multiplicity) — this is purely a
     *   performance trade. LSH-style pair generators (dd6/dd7) emit the
     *   same pair from many bands and the dedup pays for itself each
-    *   round; grid adjacency from shifted-coordinate equi-joins (v7/v8)
+    *   round; grid adjacency from shifted-coordinate equi-joins (v7)
     *   is duplicate-free by construction, where the distinct is a pure
     *   full-edge-list shuffle + hash-agg wasted (measured: 772 s of
     *   v7's 4732 s sf10 executor profile).
@@ -92,7 +92,7 @@ object GraphOps extends OpModule {
     // explodes — the standard iterative-DataFrame trap. The INPUT pair
     // list is truncated FIRST: the symmetrize union reads it twice, and
     // callers hand this function their most expensive subtree (dd6/dd7's
-    // LSH bucket expansion, v7/v8's shifted-coordinate joins) — without
+    // LSH bucket expansion, v7's shifted-coordinate joins) — without
     // the cut, that subtree executes once per union branch (measured as
     // two full ~4 s pair-generation stages in dd6's sf1.0 profile).
     val sym = ckpt(pairs.select(col("a"), col("b")), serCkpt)

@@ -1,6 +1,7 @@
 package graft.plans
 
-import graft.tensor.{FloatDot, FloatL2Sq, FloatNorm, LongAgreeCount}
+import graft.tensor.{Arity, FloatDot, FloatL2Sq, FloatNorm, LongAgreeCount, TensorFunctions,
+  VectorFunctions}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -134,23 +135,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => KernelFusionRule)
     e.injectPostHocResolutionRule(_ => MvRewriteRule)
     e.injectPlannerStrategy(_ => IntervalJoinStrategy)
-    e.injectFunction((FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[FloatDot].getName, "float_dot"),
-      (exprs: Seq[Expression]) => FloatDot(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("float_norm"),
-      new ExpressionInfo(classOf[FloatNorm].getName, "float_norm"),
-      (exprs: Seq[Expression]) => FloatNorm(exprs.head)))
-    e.injectFunction((FunctionIdentifier("float_l2sq"),
-      new ExpressionInfo(classOf[FloatL2Sq].getName, "float_l2sq"),
-      (exprs: Seq[Expression]) => FloatL2Sq(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("sig_agree"),
-      new ExpressionInfo(classOf[LongAgreeCount].getName, "sig_agree"),
-      (exprs: Seq[Expression]) => LongAgreeCount(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("tensor_explode"),
-      new ExpressionInfo(classOf[graft.tensor.TensorExplode].getName, "tensor_explode"),
-      (exprs: Seq[Expression]) => graft.tensor.TensorExplode(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("tensor_reshape"),
-      new ExpressionInfo(classOf[graft.tensor.TensorReshape].getName, "tensor_reshape"),
-      (exprs: Seq[Expression]) => graft.tensor.TensorReshape(exprs(0), exprs(1))))
+    val sigAgree = ("sig_agree", classOf[LongAgreeCount],
+      Arity.checked("sig_agree", 2, 2)(a => LongAgreeCount(a(0), a(1))))
+    (VectorFunctions.functions ++ TensorFunctions.functions :+ sigAgree).foreach {
+      case (name, cls, build) =>
+        e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

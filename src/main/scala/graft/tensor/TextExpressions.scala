@@ -496,14 +496,14 @@ object TextFunctions {
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("poly_hash31",
-      exprs => PolyHash31(exprs.head), "built-in")
+      Arity.checked("poly_hash31", 1, 1)(a => PolyHash31(a(0))), "built-in")
     reg.createOrReplaceTempFunction("sliding_min",
-      exprs => SlidingMin(exprs(0), exprs(1)), "built-in")
+      Arity.checked("sliding_min", 2, 2)(a => SlidingMin(a(0), a(1))), "built-in")
     reg.createOrReplaceTempFunction("minhash_sig",
-      exprs => MinHashSig(exprs(0), exprs(1), exprs(2)), "built-in")
+      Arity.checked("minhash_sig", 3, 3)(a => MinHashSig(a(0), a(1), a(2))), "built-in")
     reg.createOrReplaceTempFunction("simhash_sig",
-      exprs => SimHashSig(exprs(0), exprs(1), exprs(2)), "built-in")
+      Arity.checked("simhash_sig", 3, 3)(a => SimHashSig(a(0), a(1), a(2))), "built-in")
     reg.createOrReplaceTempFunction("pair_explode",
-      exprs => PairExplode(exprs(0), exprs(1)), "built-in")
+      Arity.checked("pair_explode", 2, 2)(a => PairExplode(a(0), a(1))), "built-in")
   }
 }

@@ -287,14 +287,19 @@ case class FloatL2Sq(left: Expression, right: Expression) extends BinaryExpressi
 }
 
 object VectorFunctions {
-  /** Register `float_dot` / `float_norm` / `float_l2sq`; idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("float_dot",
-      exprs => FloatDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("float_norm",
-      exprs => FloatNorm(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("float_l2sq",
-      exprs => FloatL2Sq(exprs(0), exprs(1)), "built-in")
-  }
+  /** `float_dot` / `float_norm` / `float_l2sq` as (name, expression
+    * class, builder), each builder argument-count checked.
+    * [[graft.plans.GraftExtensions]] injects them into every session it
+    * extends.
+    */
+  private[graft] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("float_dot", classOf[FloatDot], Arity.checked("float_dot", 2, 2)(a => FloatDot(a(0), a(1)))),
+    ("float_norm", classOf[FloatNorm], Arity.checked("float_norm", 1, 1)(a => FloatNorm(a(0)))),
+    ("float_l2sq", classOf[FloatL2Sq], Arity.checked("float_l2sq", 2, 2)(a => FloatL2Sq(a(0), a(1)))))
+
+  /** Register the same functions as temporary functions; idempotent. */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+    }
 }

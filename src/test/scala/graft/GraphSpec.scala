@@ -82,20 +82,6 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
     // on top (≥ fixed + 7 at this round count), which this bound
     // excludes
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
-    def jobsIn(group: String)(body: => Unit): Int = {
-      spark.sparkContext.setJobGroup(group, group)
-      try body finally spark.sparkContext.clearJobGroup()
-      // the status store registers jobs from the listener bus
-      // asynchronously — poll until the count is stable
-      var last = -1
-      var cur = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      var waited = 0
-      while (cur != last && waited < 3000) {
-        last = cur; Thread.sleep(100); waited += 100
-        cur = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      }
-      cur
-    }
     val fixed = jobsIn("cc_jobs_fixed") {
       GraphOps.connectedComponents(pairs, maxIter = 3, earlyStop = false,
         dedupe = false).collect(): Unit

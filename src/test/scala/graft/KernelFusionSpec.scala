@@ -87,4 +87,24 @@ class KernelFusionSpec extends AnyFunSuite with SparkSuite {
     val captured = new org.apache.spark.sql.SparkSessionExtensions
     new graft.plans.GraftExtensions().apply(captured)
   }
+
+  test("injected kernels reject a wrong argument count with an error naming the function") {
+    val calls = Seq(
+      "float_dot" -> "float_dot(array(1f))",
+      "float_dot" -> "float_dot(array(1f), array(1f), array(1f))",
+      "float_norm" -> "float_norm(array(1f), array(1f))",
+      "float_l2sq" -> "float_l2sq(array(1f))",
+      "sig_agree" -> "sig_agree(array(1L))",
+      "tensor_reshape" -> "tensor_reshape(array(1f, 2f), 2, 3)",
+      "tensor_reshape" -> "tensor_reshape(array(1f))",
+      "tensor_explode" -> "tensor_explode(array(1f))",
+      "voxel_components" -> "voxel_components(array(0L, 0L, 0L), array(1L, 3L))")
+    calls.foreach { case (name, call) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $call").collect())
+      assert(e.getCondition.startsWith("WRONG_NUM_ARGS") && e.getMessage.contains(name), s"$call: ${e.getMessage}")
+    }
+    // the variadic tail still accepts any number of aligned arrays
+    assert(spark.sql("SELECT tensor_explode(array(1f, 2f), array(2L), array(7L, 8L), array('a', 'b'))")
+      .collect().map(_.toSeq.drop(2)).toSeq == Seq(Seq(7L, "a"), Seq(8L, "b")))
+  }
 }

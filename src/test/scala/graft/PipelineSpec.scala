@@ -57,7 +57,6 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     val total = inst.agg(sum(element_at(col("instvoxcoord_shape"), 1))).collect()(0).getLong(0)
     val longRows = {
       vox.createOrReplaceTempView("ps_vox")
-      graft.tensor.TensorFunctions.register(spark)
       spark.sql(
         """SELECT element_at(voxlabel, t.idx + 1) AS vl FROM ps_vox
           |LATERAL VIEW tensor_explode(voxcoord, voxcoord_shape) t AS idx, slice""".stripMargin)

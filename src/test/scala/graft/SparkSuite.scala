@@ -13,4 +13,20 @@ trait SparkSuite {
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Jobs run by `body`, counted through a job group. */
+  def jobsIn(group: String)(body: => Unit): Int = {
+    spark.sparkContext.setJobGroup(group, group)
+    try body finally spark.sparkContext.clearJobGroup()
+    // the status store registers jobs from the listener bus
+    // asynchronously — poll until the count is stable
+    var last = -1
+    var cur = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    var waited = 0
+    while (cur != last && waited < 3000) {
+      last = cur; Thread.sleep(100); waited += 100
+      cur = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    }
+    cur
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
-import graft.tensor.TensorFunctions
-import org.scalacheck.Gen
+import org.apache.spark.SparkThrowable
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +21,6 @@ class TensorPropertySpec extends AnyFunSuite with SparkSuite {
     (0 until count).flatMap(i => tensorGen.apply(Gen.Parameters.default, Seed(i.toLong)))
 
   test("law: tensor_explode(flatten(t), shape(t)) reassembles t row-major") {
-    TensorFunctions.register(spark)
     import spark.implicits._
     cases(25).foreach { case (data, n, m) =>
       val df = Seq((data, Array(n, m))).toDF("data", "shape")
@@ -37,8 +36,49 @@ class TensorPropertySpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("law: tensor_explode's aligned arrays equal element_at(label, idx + 1), ANSI and not") {
+    import spark.implicits._
+    // null arrays, null elements, and lengths below, at and above the
+    // first axis (empty included)
+    def labels[T](elem: Gen[T], n: Int): Gen[Option[Seq[Option[T]]]] =
+      Gen.option(Gen.choose(0, n + 3).flatMap(Gen.listOfN(_, Gen.option(elem))))
+    val caseGen = for {
+      n <- Gen.choose(0, 6)
+      m <- Gen.choose(1, 3)
+      data <- Gen.listOfN(n * m, Gen.chooseNum(-1e3f, 1e3f))
+      la <- labels(Gen.chooseNum(-5L, 5L), n)
+      lb <- labels(Gen.alphaStr.map(_.take(3)), n)
+    } yield (data, Seq(n.toLong, m.toLong), la, lb)
+    /** Rows, or the error conditions on the cause chain of the failure. */
+    def run(sql: String): Either[Set[String], Seq[Seq[Any]]] =
+      try Right(spark.sql(sql).collect().toSeq.map(_.toSeq).sortBy(_.head.asInstanceOf[Int]))
+      catch {
+        case e: Exception => Left(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collect { case t: SparkThrowable if t.getCondition != null => t.getCondition }.toSet)
+      }
+    val ansiBefore = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq(true -> 30, false -> 15).foreach { case (ansi, count) =>
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val prop = Prop.forAll(caseGen) { c =>
+        Seq(c).toDF("data", "shape", "la", "lb").createOrReplaceTempView("prop_al")
+        val aligned = run(
+          """SELECT t.* FROM prop_al
+            |LATERAL VIEW tensor_explode(data, shape, la, lb) t AS idx, slice, a, b""".stripMargin)
+        val byIndex = run(
+          """SELECT t.idx, t.slice, element_at(la, t.idx + 1), element_at(lb, t.idx + 1) FROM prop_al
+            |LATERAL VIEW tensor_explode(data, shape) t AS idx, slice""".stripMargin)
+        val short = Seq(c._3, c._4).exists(_.exists(_.length < c._2.head))
+        aligned == byIndex && (aligned match {
+          case Left(conds) => ansi && short && conds("INVALID_ARRAY_INDEX_IN_ELEMENT_AT")
+          case Right(_) => !(ansi && short)
+        })
+      }
+      val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(count).withInitialSeed(11L), prop)
+      assert(res.passed, s"ansi=$ansi: ${res.status}")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansiBefore)
+  }
+
   test("law: flatten(tensor_reshape(d, m)) == d for any divisible length") {
-    TensorFunctions.register(spark)
     import spark.implicits._
     cases(25).foreach { case (data, _, m) =>
       val df = Seq((data, m.toInt)).toDF("data", "k")

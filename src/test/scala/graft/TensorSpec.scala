@@ -1,7 +1,6 @@
 package graft
 
 import graft.etl.EventTables
-import graft.tensor.TensorFunctions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,8 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TensorSpec extends AnyFunSuite with SparkSuite {
 
+  /** Built-in-composed equivalent of tensor_explode for 2-D tensors:
+    * `posexplode` over `slice`s, to cross-check the native Generator.
+    */
+  private def explodeSql(dataCol: String, shapeCol: String): String = {
+    val stride = s"CAST(aggregate(slice($shapeCol, 2, size($shapeCol) - 1), 1L, (a, x) -> a * x) AS INT)"
+    s"posexplode(transform(sequence(0, CAST(element_at($shapeCol, 1) AS INT) - 1), " +
+      s"i -> slice($dataCol, i * $stride + 1, $stride)))"
+  }
+
   test("tensor_explode recovers row count and row content") {
-    TensorFunctions.register(spark)
     val df = EventTables.spacepoints(spark, nEvents = 3, nPoints = 50)
     df.createOrReplaceTempView("te_events")
     val long = spark.sql(
@@ -30,21 +37,32 @@ class TensorSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("native generator matches built-in-composed explode") {
-    TensorFunctions.register(spark)
     val df = EventTables.spacepoints(spark, nEvents = 2, nPoints = 40)
     df.createOrReplaceTempView("te2_events")
     val native = spark.sql(
       """SELECT event, t.idx, t.slice FROM te2_events
         |LATERAL VIEW tensor_explode(spacepoint_t, spacepoint_t_shape) t AS idx, slice""".stripMargin)
     val composed = spark.sql(
-      s"""SELECT event, ${TensorFunctions.explodeSql("spacepoint_t", "spacepoint_t_shape")}
+      s"""SELECT event, ${explodeSql("spacepoint_t", "spacepoint_t_shape")}
          |AS (idx, slice) FROM te2_events""".stripMargin)
     assert(native.exceptAll(composed).count() == 0)
     assert(composed.exceptAll(native).count() == 0)
   }
 
+  test("tensor_explode and voxel_components read an int shape like a long one") {
+    import spark.implicits._
+    Seq((Array(1f, 2f, 3f, 4f, 5f, 6f), Array(2L, 3L), Array(0L, 0L, 0L, 0L, 0L, 2L), Array(1L, 1L)))
+      .toDF("data", "shape", "coord", "label").createOrReplaceTempView("te_int")
+    def rows(shape: String) = spark.sql(
+      s"""SELECT t.idx, t.slice, voxel_components(coord, $shape, label) AS comp FROM te_int
+         |LATERAL VIEW tensor_explode(data, $shape) t AS idx, slice""".stripMargin)
+      .collect().map(_.toSeq).toSeq
+    val want = Seq(Seq(0, Seq(1f, 2f, 3f), Seq(0L, 2L)), Seq(1, Seq(4f, 5f, 6f), Seq(0L, 2L)))
+    assert(rows("shape") == want)
+    assert(rows("CAST(shape AS ARRAY<INT>)") == want)
+  }
+
   test("tensor_reshape nests row-major and round-trips with flatten") {
-    TensorFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1f, 2f, 3f, 4f, 5f, 6f), 3)).toDF("data", "k")
     df.createOrReplaceTempView("tr")
@@ -57,7 +75,6 @@ class TensorSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("rank-3 reshape round-trip law: flatten(reshape(x, shape)) == x") {
-    TensorFunctions.register(spark)
     import spark.implicits._
     val data = (1 to 24).map(_.toFloat).toArray
     Seq(Tuple1(data)).toDF("data").createOrReplaceTempView("tr3")
@@ -85,7 +102,6 @@ class TensorSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("rank-N reshape demands a foldable shape vector") {
-    TensorFunctions.register(spark)
     import spark.implicits._
     Seq((Array(1f, 2f, 3f, 4f), Array(2L, 2L))).toDF("data", "shp")
       .createOrReplaceTempView("tr_dyn")
@@ -96,7 +112,6 @@ class TensorSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("tensor_reshape rejects non-divisible lengths") {
-    TensorFunctions.register(spark)
     import spark.implicits._
     Seq((Array(1f, 2f, 3f), 2)).toDF("data", "k").createOrReplaceTempView("tr_bad")
     val e = intercept[Exception] {
