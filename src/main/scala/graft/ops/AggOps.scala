@@ -439,11 +439,6 @@ object AggOps extends OpModule {
           x.as("x").join(vox.as("y"), col("y.id") === col("x.id") + delta)
             .select(col("x.id").as("a"), col("y.id").as("b"))
         }
-        // earlyStop deliberately kept ON (adjudicated round 8, isolated
-        // reps=3 at sf0.1): each STEP eagerly materializes via
-        // localCheckpoint, so earlyStop's adaptive round count (stop as
-        // soon as labels stabilize) beats any conservative fixed
-        // budget; the probe is one aggregate scan (Σcomp monotone-sum).
         // dedupe=false: shifted-coordinate equi-joins over a distinct
         // cell set cannot emit duplicate pairs, so the edge-list
         // distinct would be a pure full-shuffle tax (772 s of the 4732 s

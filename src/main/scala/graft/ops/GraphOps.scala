@@ -41,51 +41,36 @@ object GraphOps extends OpModule {
       else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Connected components by iterative min-label propagation: each
-    * vertex repeatedly adopts the smallest component id among itself and
-    * its neighbors. Converges in O(component diameter) rounds — near-dup
-    * graphs are dense cliques with tiny diameters, so a handful of
-    * rounds suffices at any scale. Each round is one equi-join + one
-    * aggregation (both shuffle-partitioned by vertex id); intermediate
-    * results are cached and released round-by-round. At deployment
-    * scale the edge side buckets by vertex id and the per-round join
-    * plans exchange-free on it (BucketingSpec's PageRank-round pin —
-    * identical key shape — and PLANS.md "bucketed iterative-join
-    * round").
+    * round every vertex adopts the smallest label among itself and its
+    * neighbors (one equi-join + one aggregation, both keyed by vertex
+    * id), then its label's own label (one pointer jump). The edge side
+    * can bucket by vertex id so the per-round join plans exchange-free
+    * (BucketingSpec's PageRank-round pin, PLANS.md "bucketed
+    * iterative-join round").
+    *
+    * Each round's final checkpoint carries `changed = comp <> prev`
+    * (`prev` = the round's input label); the loop stops after the first
+    * round with no changed row — one plain `isEmpty` job over the cached
+    * checkpoint, exact under task retry and for any orderable id type.
+    * Exhausting `maxIter` with labels still changing throws.
+    *
+    * Labels initialize from the EDGE ENDPOINTS, never from a full vertex
+    * set: isolated vertices never change, and dragging them through
+    * every round measured 1.8× the whole v7 query (976 vs 541 s
+    * executor, sf1.0); callers left-join + coalesce them once instead.
     *
     * @param pairs undirected edges (a, b)
+    * @param maxIter runaway bound on the rounds, the confirming
+    *   no-change round included
+    * @param dedupe distinct() the symmetrized edge list first. Duplicate
+    *   edges do not change a min, so this is purely a performance trade:
+    *   it pays off for LSH pair lists that repeat pairs, and is a wasted
+    *   full-edge shuffle for duplicate-free inputs (772 s of v7's 4732 s
+    *   sf10 executor profile).
+    * @param serCkpt checkpoint storage level, see [[ckpt]]
     * @return (id, comp) — comp is the minimum vertex id of the component
     */
-  /** @param earlyStop run a convergence-check job each round (costs one
-    *   extra job per round; disable for graphs with known small diameter
-    *   and set maxIter to that bound instead).
-    * @param verify only meaningful with earlyStop=false: VERIFY the fixed
-    *   budget after the last round — if labels are still changing,
-    *   propagation resumes with per-round checks (up to 16 more rounds)
-    *   and throws if still unconverged, rather than silently emitting
-    *   split clusters. Off by default so fixed-budget callers keep their
-    *   cost bound: earlyStop=false && verify=false runs EXACTLY maxIter
-    *   rounds and returns best-effort labels.
-    * @param dedupe distinct() the symmetrized edge list before iterating.
-    *   Duplicate edges are SEMANTICALLY harmless to min-propagation (a
-    *   min over a multiset ignores multiplicity) — this is purely a
-    *   performance trade. LSH-style pair generators (dd6/dd7) emit the
-    *   same pair from many bands and the dedup pays for itself each
-    *   round; grid adjacency from shifted-coordinate equi-joins (v7)
-    *   is duplicate-free by construction, where the distinct is a pure
-    *   full-edge-list shuffle + hash-agg wasted (measured: 772 s of
-    *   v7's 4732 s sf10 executor profile).
-    *
-    * Labels deliberately initialize from the EDGE ENDPOINTS (one
-    * distinct over the edge list), never from a caller-supplied full
-    * vertex set: in sparse grids most vertices are isolated (v7 at
-    * sf1.0: ~0.7 M connected of 5.6 M cells), their labels can never
-    * change, and dragging them through every round's joins and
-    * checkpoints was measured at 1.8× the whole query (976 vs 541 s
-    * executor, sf1.0) against the callers' one-time final
-    * left-join + coalesce for isolated vertices.
-    */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
-      earlyStop: Boolean = true, verify: Boolean = false,
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
       dedupe: Boolean = true, serCkpt: Boolean = false): DataFrame = {
     // localCheckpoint (not cache): each round's plan must be TRUNCATED,
     // or the logical plan doubles every iteration and analysis time
@@ -105,29 +90,14 @@ object GraphOps extends OpModule {
       else symmetrized
     var labels = ckpt(edges.select(col("a").as("id")).distinct()
       .withColumn("comp", col("id")), serCkpt)
-    var obsId = 0
-
-    /** One propagation round. With `probe` set, the new labels'
-      * Σcomp rides the SAME job that materializes the round's
-      * checkpoint, via `observe` (a CollectMetrics node over the final
-      * projection): round 12 measured dd6's residual as per-job
-      * scheduling cost × rounds, and the separate labelSum aggregate
-      * scan was exactly one such job per round (round-13 #8). The
-      * observed sum is exact decimal, collected from the single eager
-      * materialization; failed tasks' updates are excluded by the
-      * accumulator contract, but a stage RETRY can double-count — and
-      * inflation exactly offsetting a real decrease would fake
-      * equality. The loop therefore treats the observation as a screen
-      * only: any observed non-decrease is confirmed with one
-      * authoritative aggregate before convergence is declared (see
-      * sumDiffChanged in the loop body), so the failure mode of a bad
-      * observation is one extra confirm job, never silently split
-      * components.
-      */
-    def step(cur: DataFrame, probe: Boolean = false)
-        : (DataFrame, java.math.BigDecimal) = {
+    var rounds = 0
+    var changed = true
+    while (changed) {
+      require(rounds < maxIter,
+        s"connectedComponents: labels still changing after $maxIter rounds " +
+          "(graph diameter exceeds the budget — raise maxIter)")
       val neighborMin = edges
-        .join(cur.withColumnRenamed("id", "b2"), col("b") === col("b2"))
+        .join(labels.withColumnRenamed("id", "b2"), col("b") === col("b2"))
         .groupBy(col("a").as("id"))
         .agg(min("comp").as("ncomp"))
       // truncated BEFORE the pointer-jump self-join: its two sides
@@ -135,10 +105,11 @@ object GraphOps extends OpModule {
       // merge them and the edge join + aggregation above — the expensive
       // half of the round — would execute twice (measured as two full
       // label-size scans per round in v7's sf10 profile)
-      val stepped = ckpt(cur
+      val stepped = ckpt(labels
         .join(neighborMin, Seq("id"), "left")
         .select(col("id"),
-          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp")), serCkpt)
+          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"),
+          col("comp").as("prev")), serCkpt)
       // pointer jumping: adopt the label's own label too — chains collapse
       // in O(log diameter) rounds instead of O(diameter).
       //
@@ -165,139 +136,15 @@ object GraphOps extends OpModule {
       //   more. A fixed-point estimate reset (releaf with HONEST
       //   computed stats) would need a count+size job per round, the
       //   same cost class it saves.
-      val jumped = stepped.as("x")
+      val jumped = least(col("x.comp"), coalesce(col("y.ccomp"), col("x.comp")))
+      val next = ckpt(stepped.as("x")
         .join(stepped.select(col("id").as("cid"), col("comp").as("ccomp")).as("y"),
           col("x.comp") === col("y.cid"), "left")
-        .select(col("x.id").as("id"),
-          least(col("x.comp"), coalesce(col("y.ccomp"), col("x.comp"))).as("comp"))
-      if (probe) {
-        obsId += 1
-        val obs = org.apache.spark.sql.Observation(s"cc_sum_$obsId")
-        val out = ckpt(jumped.observe(obs,
-          sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-            .as("sumcomp")), serCkpt)
-        val s = obs.get("sumcomp") match {
-          case null => null
-          case d: java.math.BigDecimal => d
-          case d: scala.math.BigDecimal => d.bigDecimal
-          case other => throw new IllegalStateException(
-            s"unexpected observed Σcomp type: $other")
-        }
-        (out, s)
-      } else (ckpt(jumped, serCkpt), null)
-    }
-    // Convergence probe: labels are MONOTONE — every round maps comp to
-    // least(comp, …) over a fixed id set — so for INTEGRAL ids Σcomp
-    // strictly decreases iff any label changed, and an exact decimal
-    // sum-equality replaces a changed-row join (two full label scans +
-    // a shuffle) with an observed aggregate riding the checkpoint
-    // materialization itself (zero extra jobs — see step's scaladoc);
-    // the previous round's sum is remembered, so each round pays
-    // exactly one probe. Non-numeric ids (EntityOps clusters string
-    // keys) have no sum — they keep the join probe.
-    val numericIds = labels.schema("comp").dataType match {
-      case org.apache.spark.sql.types.LongType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.ShortType |
-        org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head().getDecimal(0)
-    def sumEq(x: java.math.BigDecimal, y: java.math.BigDecimal): Boolean =
-      (x == null && y == null) || // null ⇔ empty label set: trivially stable
-        (x != null && y != null && x.compareTo(y) == 0)
-    def joinChanged(next: DataFrame, cur: DataFrame): Boolean =
-      next.as("u")
-        .join(cur.as("l"), col("u.id") === col("l.id"))
-        .filter(col("u.comp") =!= col("l.comp"))
-        .limit(1).count() > 0
-    // Authoritative change detector for the NUMERIC path, one aggregate
-    // query over the two checkpointed label tables (cheaper than the
-    // join: no shuffle on id, final round only). Soundness is the same
-    // monotonicity that powers the probe, applied POINTWISE: each round
-    // maps comp(v) to least(comp(v), …) over a fixed id set, so
-    // cur(v) − next(v) ≥ 0 for every v and Σ(cur − next) = 0 ⇔ no label
-    // changed — a plain exact-decimal aggregate, no accumulators, so no
-    // retry-inflation caveat.
-    def sumDiffChanged(next: DataFrame, cur: DataFrame): Boolean = {
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      cur.select((col("comp").cast(dec)).as("t"))
-        .union(next.select((-col("comp").cast(dec)).as("t")))
-        .agg(sum(col("t"))).head().getDecimal(0) match {
-          case null => false // empty label set: trivially stable
-          case d => d.signum != 0
-        }
-    }
-
-    var converged = false
-    var i = 0
-    var curSum = if (earlyStop && numericIds) labelSum(labels) else null
-    var prevLabels: DataFrame = null
-    while (!converged && i < maxIter) {
-      val (updated, nextSum) = step(labels, probe = earlyStop && numericIds)
-      if (earlyStop) {
-        if (numericIds) {
-          // The observed sum is a SCREEN, not the verdict: accumulators
-          // can double-count on stage retries, and inflation that
-          // exactly offsets a real decrease would fake equality while
-          // labels still change — so observed equality (or any
-          // non-decrease, impossible for true monotone sums) is
-          // CONFIRMED with one authoritative aggregate (sumDiffChanged)
-          // before declaring convergence. The extra job is paid only at
-          // the final round (and on retry-inflated rounds), preserving
-          // the zero-extra-jobs steady state; a confirmed-unconverged
-          // round resyncs curSum authoritatively so a poisoned
-          // observation cannot propagate through the chain.
-          val suspicious = sumEq(nextSum, curSum) ||
-            (nextSum != null && curSum != null && nextSum.compareTo(curSum) >= 0)
-          if (suspicious) {
-            converged = !sumDiffChanged(updated, labels)
-            curSum = if (converged) nextSum else labelSum(updated)
-          } else curSum = nextSum
-        } else converged = !joinChanged(updated, labels)
-      }
-      prevLabels = labels
-      labels = updated
-      i += 1
-    }
-    // Budget exhausted "unconverged": confirm AUTHORITATIVELY before
-    // throwing (round 14). A retry-INFLATED observation mid-run poisons
-    // curSum upward, and every later round's true sum then reads as a
-    // strict decrease — convergence becomes undetectable through the
-    // observation chain alone, and a tight budget (dd6's maxIter=3)
-    // would throw on a perfectly converged answer. Measured in the
-    // wild: the sf100 campaign's disk-margin task aborts retried dd6's
-    // stages and its warm-up threw exactly here while the identical
-    // timed rep passed. One extra aggregate, paid only on the
-    // about-to-throw path; a REAL unconverged run still throws.
-    if (earlyStop && !converged && numericIds && prevLabels != null)
-      converged = !sumDiffChanged(labels, prevLabels)
-    // earlyStop callers asked for convergence, with maxIter as a
-    // runaway bound — exhausting it unconverged must THROW, never
-    // silently emit split components (the fixed-budget best-effort
-    // contract is the earlyStop=false && verify=false mode)
-    if (earlyStop) require(converged,
-      s"connectedComponents: labels still changing after $maxIter rounds " +
-        "(graph diameter exceeds the budget — raise maxIter)")
-    if (!earlyStop && verify) {
-      // post-hoc convergence guarantee (one cheap check; the graph here is
-      // the tiny representative graph, so extra rounds are cheap too)
-      var extra = 0
-      var stable = false
-      var vSum = if (numericIds) labelSum(labels) else null
-      while (!stable && extra < 16) {
-        val (updated, nextSum) = step(labels, probe = numericIds)
-        if (numericIds) {
-          stable = sumEq(nextSum, vSum)
-          vSum = nextSum
-        } else stable = !joinChanged(updated, labels)
-        labels = updated
-        extra += 1
-      }
-      require(stable,
-        s"connectedComponents: labels still changing after $maxIter+$extra rounds")
+        .select(col("x.id").as("id"), jumped.as("comp"),
+          (jumped =!= col("x.prev")).as("changed")), serCkpt)
+      changed = !next.filter(col("changed")).isEmpty
+      labels = next.select(col("id"), col("comp"))
+      rounds += 1
     }
     labels
   }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.tensor.{Arity, FloatDot, FloatL2Sq, FloatNorm, LongAgreeCount, TensorFunctions,
+import graft.tensor.{Arity, FloatDot, FloatL2Sq, FloatNorm, LongAgreeCount, TensorFunctions, TextFunctions,
   VectorFunctions}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
@@ -124,7 +124,7 @@ object KernelFusionRule extends Rule[LogicalPlan] {
 }
 
 /** Session extensions: inject the fusion rule and register the tensor /
-  * vector SQL functions. Usage:
+  * vector / text SQL functions. Usage:
   * [[graft.Session]]`.local()`, `.withExtensions(new GraftExtensions)` on
   * any other builder, or
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
@@ -137,7 +137,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => IntervalJoinStrategy)
     val sigAgree = ("sig_agree", classOf[LongAgreeCount],
       Arity.checked("sig_agree", 2, 2)(a => LongAgreeCount(a(0), a(1))))
-    (VectorFunctions.functions ++ TensorFunctions.functions :+ sigAgree).foreach {
+    (VectorFunctions.functions ++ TensorFunctions.functions ++ TextFunctions.functions :+ sigAgree).foreach {
       case (name, cls, build) =>
         e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
     }

@@ -16,9 +16,10 @@ import org.apache.spark.sql.Encoder
   * fixed-size partial buffers (d² + d longs, 34 KB at d = 64).
   *
   * BIT-EXACTNESS CONTRACT (the law test in SimilaritySpec pins this
-  * against the retained explode form [[SimilarityOps.covMomentsByExplode]]
-  * on fixture and corpus): each term is rounded to 12 fractional digits
-  * exactly the way Spark's `cast(x AS DECIMAL(38,12))` rounds it —
+  * against the round-15 explode form, kept in the test tree as
+  * `graft.RetainedForms.covMomentsByExplode`, on fixture and corpus):
+  * each term is rounded to 12 fractional digits exactly the way
+  * Spark's `cast(x AS DECIMAL(38,12))` rounds it —
   * `java.math.BigDecimal.valueOf(double)` is the canonical-string image
   * (what Spark's Decimal.apply(Double) builds; Double.toString emits
   * ≤ 17 significant digits, below DECIMAL128's 34-digit context, so no

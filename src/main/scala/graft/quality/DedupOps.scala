@@ -102,7 +102,6 @@ object DedupOps extends OpModule {
     * the incremental-dedup path hashes snapshot slices, not whole tables.
     */
   private def tokenCodesOf(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.tensor.TextFunctions.register(s)
     // explode_OUTER + null filter on the GENERATED column, not plain
     // explode: InferFiltersFromGenerate would add a pushed-down
     // `size(array_distinct(split(...))) > 0` scan filter that tokenizes
@@ -148,7 +147,6 @@ object DedupOps extends OpModule {
     * the signature table.
     */
   def minhashSignaturesOf(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.tensor.TextFunctions.register(s)
     docs.select(col("doc_id"),
       call_function("minhash_sig",
         array_distinct(split(trim(col("text")), "\\s+")),
@@ -288,7 +286,6 @@ object DedupOps extends OpModule {
     // feed explode. The generator emits each (a, b) row directly; the
     // pair MULTISET is identical by construction and pinned by
     // DedupSpec's law test against the retained transform form.
-    graft.tensor.TextFunctions.register(cliques.sparkSession)
     val small = buckets.filter(size(col("ids")) <= expandCap)
       .repartition(shufN, col("band"), col("bkey"))
       .selectExpr("pair_explode(ids, CAST(NULL AS ARRAY<BIGINT>)) AS (a, b)")
@@ -373,19 +370,11 @@ object DedupOps extends OpModule {
   def dedupClusters(s: SparkSession, dir: String, minEstJaccard: Double): DataFrame = {
     val cliques = minhashCliques(s, dir).cache()
     val rp = repPairs(cliques, minEstJaccard, minBands = 2).select("a", "b")
-    // pointer jumping reaches 2^3 hops in 3 fixed rounds — ample for a
-    // high-threshold similarity graph (post-collapse components are
-    // near-cliques, diameter ~2); the fixed budget + one verify round
-    // measured FASTER than adaptive early-stop at sf0.1 (round-15 A/B:
-    // 4.2 s fixed vs 4.9-5.3 s adaptive — the probe/confirm aggregates
-    // cost more than the round they save on this tiny rep graph), so
-    // the round-13 shape stays. dedupe=false (round 15): repPairs'
-    // output is DISTINCT by construction (its >=minBands filter is a
-    // groupBy(a, b)), so the edge-list distinct was a pure full-edge
-    // shuffle + hash-agg + checkpoint per query (the v7/v8 measured
-    // trade, which is why only they had it).
-    val comp = graft.ops.GraphOps.connectedComponents(rp, maxIter = 3,
-      earlyStop = false, verify = true, dedupe = false)
+    // dedupe=false (round 15): repPairs' output is DISTINCT by
+    // construction (its >=minBands filter is a groupBy(a, b)), so the
+    // edge-list distinct was a pure full-edge shuffle + hash-agg +
+    // checkpoint per query.
+    val comp = graft.ops.GraphOps.connectedComponents(rp, dedupe = false)
       .withColumnRenamed("id", "rep")
     val members = cliques
       .select(element_at(col("ids"), 1).as("rep"), explode(col("ids")).as("doc_id"))
@@ -410,7 +399,6 @@ object DedupOps extends OpModule {
     * from the table, as on the aggregate path.
     */
   def simhashes(s: SparkSession, dir: String): DataFrame = {
-    graft.tensor.TextFunctions.register(s)
     Tables(s, dir, "documents").select(col("doc_id"),
       call_function("simhash_sig",
         array_distinct(split(trim(col("text")), "\\s+")),
@@ -576,7 +564,6 @@ object DedupOps extends OpModule {
     * stream decides how to verdict them); the batch path filters them.
     */
   def minhashSigsPerRow(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.tensor.TextFunctions.register(s)
     docs.select(col("doc_id"),
       call_function("minhash_sig",
         array_distinct(split(trim(col("text")), "\\s+")),
@@ -1358,7 +1345,6 @@ object DedupOps extends OpModule {
     * ([[graft.streaming.DedupStream.bloomGate]]).
     */
   def bloomWordsRow(s: SparkSession, prior0: DataFrame, mBits: Int = 4096): DataFrame = {
-    graft.tensor.TextFunctions.register(s)
     val nWords = mBits / 32 // 32-bit words: shift stays sign-safe in BIGINT
     prior0.select(expr("poly_hash31(text)").as("h"))
       .select(explode(bloomPositions(mBits)).as("pos"))
@@ -1371,7 +1357,6 @@ object DedupOps extends OpModule {
 
   def bloomVerdicts(s: SparkSession, prior0: DataFrame, fresh0: DataFrame,
       mBits: Int = 4096): DataFrame = {
-    graft.tensor.TextFunctions.register(s)
     val wordsRow = bloomWordsRow(s, prior0, mBits)
     val priorHashes = prior0.select(md5(col("text")).as("pm")).distinct()
     fresh0.select(col("doc_id"), col("text"), expr("poly_hash31(text)").as("h"))

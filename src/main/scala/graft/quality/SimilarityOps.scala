@@ -23,27 +23,16 @@ object SimilarityOps extends OpModule {
     * double fold over the array order of a single row (no shuffle), the
     * same arithmetic as DuckDB's `list_sum(list_transform(...))` —
     * verified bit-exact — so oracle parity holds without decimal
-    * accumulators. The caller's query fn must have called
-    * [[graft.tensor.VectorFunctions.register]] on the session.
+    * accumulators. `float_dot` reaches every [[graft.Session]] through
+    * [[graft.plans.GraftExtensions]].
     */
   def dot(a: Column, b: Column): Column = call_function("float_dot", a, b)
 
   /** L2 norm (same fold contract, codegen'd). */
   def l2norm(a: Column): Column = call_function("float_norm", a)
 
-  /** Interpreted HOF twins, kept as the cross-check reference for
-    * VectorKernelSpec (must stay bit-identical to the codegen kernels).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-  def l2normHof(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x))
-
   /** Brute-force cosine top-k: query rows broadcast against all candidates. */
   def knnBrute(s: SparkSession, dir: String, nQueries: Int, k: Int): DataFrame = {
-    graft.tensor.VectorFunctions.register(s)
     val base = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
     val q = base.filter(col("vec_id") < nQueries)
@@ -78,7 +67,6 @@ object SimilarityOps extends OpModule {
     * its recall against [[knnBrute]].
     */
   def knnLsh(s: SparkSession, dir: String, nQueries: Int, k: Int): DataFrame = {
-    graft.tensor.VectorFunctions.register(s)
     // float planes so the codegen float_dot kernel applies end-to-end
     def sig(emb: Column): Column =
       planes.zipWithIndex.map { case (p, j) =>
@@ -155,7 +143,6 @@ object SimilarityOps extends OpModule {
     * Further Lloyd rounds are this same function composed.
     */
   def ivfRefinedCentroids(s: SparkSession, dir: String, nCentroids: Int): DataFrame = {
-    graft.tensor.VectorFunctions.register(s)
     val base = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
     val seeds = base.filter(col("vec_id") < nCentroids)
@@ -187,7 +174,6 @@ object SimilarityOps extends OpModule {
     */
   def knnIvf(s: SparkSession, dir: String, nQueries: Int, k: Int,
       nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    graft.tensor.VectorFunctions.register(s)
     val base = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
     // localCheckpoint (eager) truncates the centroid lineage: the Lloyd
@@ -244,7 +230,6 @@ object SimilarityOps extends OpModule {
     */
   def semDedup(s: SparkSession, dir: String, nCentroids: Int = 16,
       tau: Double = 0.35): DataFrame = {
-    graft.tensor.VectorFunctions.register(s)
     val base = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
     val cents = ivfRefinedCentroids(s, dir, nCentroids).localCheckpoint()
@@ -401,41 +386,6 @@ object SimilarityOps extends OpModule {
           col("varr"), (c, vv) => c * vv),
           lit(0.0), (acc, x) => acc + x), 9).as("pc1"))
       .orderBy("vec_id")
-  }
-
-  /** RETAINED round-15 covariance-moments plan — the count scan, the
-    * posexplode μ pass and the d²-per-row outer-product explode with
-    * (p,q)-keyed shuffled DECIMAL(38,12) sums that [[CovMomentsAggImpl]]
-    * replaced in round 16. Kept (unused by any query) as the reference
-    * side of the bit-for-bit kernel law in SimilaritySpec: same output
-    * shape as the kernel (n, per-p counts, msum, psum row-major), so the
-    * spec compares rows directly. The per-p posexplode counts are
-    * returned as an array (`cnts`) — on uniform-d input every entry
-    * equals the kernel's single `nvec`.
-    */
-  private[graft] def covMomentsByExplode(emb: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def dec(c: Column): Column = sum(c.cast(DecimalType(38, 12))).cast("double")
-    val cnt = emb.agg(count(lit(1)).cast("long").as("n"))
-    val mu = emb.select(posexplode(col("embedding")).as(Seq("p", "v")))
-      .select(col("p"), col("v").cast("double").as("v"))
-      .groupBy("p").agg(dec(col("v")).as("ms"), count(lit(1)).as("c"))
-    val xy = emb
-      .select(explode_outer(flatten(transform(col("embedding"), (vp, p) =>
-        transform(col("embedding"), (vq, q) => struct(p.as("p"), q.as("q"),
-          (vp.cast("double") * vq.cast("double")).as("xy")))))).as("t"))
-      .filter(col("t").isNotNull)
-      .groupBy(col("t.p").as("p"), col("t.q").as("q"))
-      .agg(dec(col("t.xy")).as("sxy"))
-    cnt
-      .crossJoin(mu.agg(
-        transform(array_sort(collect_list(struct(col("p"), col("c")))),
-          x => x.getField("c")).as("cnts"),
-        transform(array_sort(collect_list(struct(col("p"), col("ms")))),
-          x => x.getField("ms")).as("msum")))
-      .crossJoin(xy.agg(
-        transform(array_sort(collect_list(struct(col("p"), col("q"), col("sxy")))),
-          x => x.getField("sxy")).as("psum")))
   }
 
   /** DuckDB twin of [[powerPca]]: the same covariance (per-term double
@@ -618,7 +568,6 @@ object SimilarityOps extends OpModule {
         |         CAST(row_number() OVER (ORDER BY cos_sim DESC, a ASC, b ASC) AS BIGINT) AS rnk
         |  FROM sc) WHERE rnk <= 50 ORDER BY rnk""".stripMargin),
       (s, dir) => {
-        graft.tensor.VectorFunctions.register(s)
         val base = Tables(s, dir, "embeddings").filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
         val l = base.select(col("vec_id").as("a"), col("embedding").as("ea"), col("nrm").as("na"))
@@ -668,7 +617,6 @@ object SimilarityOps extends OpModule {
          |  FROM sc) WHERE rnk <= 50 ORDER BY rnk""".stripMargin
     },
       (s, dir) => {
-        graft.tensor.VectorFunctions.register(s)
         def sig(emb: Column): Column =
           planes.zipWithIndex.map { case (p, j) =>
             val pc = array(p.toIndexedSeq.map(lit): _*).cast("array<float>")
@@ -776,7 +724,6 @@ object SimilarityOps extends OpModule {
         |FROM e LEFT JOIN comp c ON c.id = e.vec_id
         |ORDER BY vec_id""".stripMargin),
       (s, dir) => {
-        graft.tensor.VectorFunctions.register(s)
         val base = Tables(s, dir, "embeddings").filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
         val l = base.select(col("vec_id").as("a"), col("embedding").as("ea"), col("nrm").as("na"))
@@ -786,10 +733,8 @@ object SimilarityOps extends OpModule {
           .select("a", "b")
         // dedupe=false (round 15): the a<b join emits each edge exactly
         // once; the distinct was a wasted shuffle (the dd6 change, same
-        // rationale — DedupOps.dedupClusters; fixed 3+verify budget
-        // kept, measured faster than adaptive at sf0.1)
-        val comp = graft.ops.GraphOps.connectedComponents(edges, maxIter = 3,
-          earlyStop = false, verify = true, dedupe = false)
+        // rationale — DedupOps.dedupClusters)
+        val comp = graft.ops.GraphOps.connectedComponents(edges, dedupe = false)
         base.select(col("vec_id"))
           .join(comp.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
           .select(col("vec_id"), coalesce(col("comp"), col("vec_id")).as("cluster_rep"))
@@ -955,12 +900,6 @@ object SimilarityOps extends OpModule {
     */
   def l2sq(a: Column, b: Column): Column = call_function("float_l2sq", a, b)
 
-  /** Interpreted HOF twin of [[l2sq]] (VectorKernelSpec cross-check). */
-  def l2sqHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b,
-      (x, y) => (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, x) => acc + x)
-
   /** 65-dim double hyperplanes for the LIFTED MIPS space: 64 data dims
     * plus the augmented coordinate. Doubles (not the float planes of
     * nn2): the augmented coordinate √(M²−|x|²) is born double, and
@@ -1006,7 +945,6 @@ object SimilarityOps extends OpModule {
     * broadcast, shuffle keyed on a 1-byte signature, sort-limit top-k.
     */
   def knnMips(s: SparkSession, dir: String, nQueries: Int, k: Int): DataFrame = {
-    graft.tensor.VectorFunctions.register(s)
     val base = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
       .crossJoin(broadcast(
@@ -1124,7 +1062,6 @@ object SimilarityOps extends OpModule {
   }
 
   private[graft] def pqRefinedCodebook(s: SparkSession, dir: String): DataFrame = {
-    graft.tensor.VectorFunctions.register(s)
     val seeds = pqSubspaces(Tables(s, dir, "embeddings").filter(col("vec_id") < PqK))
       .select(col("vec_id").as("cid"), col("s"), col("subv").as("cent"))
     // per-row encode (zero-shuffle), then the keyed mean over 512 groups
@@ -1152,7 +1089,6 @@ object SimilarityOps extends OpModule {
     */
   def knnPq(s: SparkSession, dir: String, nQueries: Int, k: Int,
       refined: Boolean = true): DataFrame = {
-    graft.tensor.VectorFunctions.register(s)
     // localCheckpoint: the codebook's own full-table Lloyd pass runs
     // once, not once per broadcast consumer (codes + dtab) — the same
     // lineage truncation as nn3's centroids
@@ -1240,7 +1176,6 @@ object SimilarityOps extends OpModule {
     */
   private def ivfPqAdc(s: SparkSession, dir: String, nQueries: Int,
       nCoarse: Int, nProbe: Int): DataFrame = {
-    graft.tensor.VectorFunctions.register(s)
     val base = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val coarse = base.filter(col("vec_id") < nCoarse)
       .select(col("vec_id").as("cell"), col("embedding").as("cemb"))

@@ -69,7 +69,6 @@ object TextOps extends OpModule {
   def winnowFingerprintsOf(s: org.apache.spark.sql.SparkSession,
       docs: org.apache.spark.sql.DataFrame,
       k: Int = 8, w: Int = 16): org.apache.spark.sql.DataFrame = {
-    graft.tensor.TextFunctions.register(s)
     // poly_hash31(substring(text, i, k)) == the per-char Horner fold over
     // positions i..i+k−1 whenever i+k−1 ≤ length(text) — true for every
     // position the sequence generates when length ≥ k (the corpus's min
@@ -118,7 +117,6 @@ object TextOps extends OpModule {
     */
   def cdcChunkTable(s: org.apache.spark.sql.SparkSession,
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.tensor.TextFunctions.register(s)
     docs
       .withColumn("hs", expr(
         "transform(sequence(1, greatest(1, length(text) - 7)), i -> poly_hash31(substring(text, i, 8)))"))

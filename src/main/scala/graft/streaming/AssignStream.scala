@@ -32,7 +32,6 @@ object AssignStream {
     * are.
     */
   private def centroidLits(spark: SparkSession, dir: String, nCentroids: Int): Seq[(Long, Array[Double], Double)] = {
-    graft.tensor.VectorFunctions.register(spark)
     graft.quality.SimilarityOps.ivfRefinedCentroids(spark, dir, nCentroids)
       .select(col("cent"), col("cemb"), col("cnrm"))
       .collect()
@@ -49,7 +48,6 @@ object AssignStream {
     */
   def nearestCentroid(spark: SparkSession, dir: String, emb: Column,
       nCentroids: Int = 16): Column = {
-    graft.tensor.VectorFunctions.register(spark)
     val nrm = graft.quality.SimilarityOps.l2norm(emb)
     val cands: Seq[Column] = centroidLits(spark, dir, nCentroids).map { case (id, cemb, cnrm) =>
       // same centSim arithmetic as the batch assignment (HOF fold over

@@ -110,7 +110,6 @@ object DedupStream {
     */
   def bloomGate(spark: SparkSession, prior: DataFrame, streamDir: String,
       mBits: Int = 4096): DataFrame = {
-    graft.tensor.TextFunctions.register(spark)
     val wordsLocal: Seq[Long] = graft.quality.DedupOps.bloomWordsRow(spark, prior, mBits)
       .head().getAs[scala.collection.Seq[Long]]("words").toSeq
     spark.readStream

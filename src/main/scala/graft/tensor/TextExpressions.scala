@@ -490,20 +490,28 @@ case class PairExplode(left: Expression, right: Expression)
 }
 
 object TextFunctions {
-  /** Register `poly_hash31` / `sliding_min` / `minhash_sig` /
-    * `simhash_sig` / `pair_explode`; idempotent.
+  /** `poly_hash31` / `sliding_min` / `minhash_sig` / `simhash_sig` /
+    * `pair_explode` as (name, expression class, builder), each builder
+    * argument-count checked. [[graft.plans.GraftExtensions]] injects
+    * them into every session it extends.
     */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("poly_hash31",
-      Arity.checked("poly_hash31", 1, 1)(a => PolyHash31(a(0))), "built-in")
-    reg.createOrReplaceTempFunction("sliding_min",
-      Arity.checked("sliding_min", 2, 2)(a => SlidingMin(a(0), a(1))), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      Arity.checked("minhash_sig", 3, 3)(a => MinHashSig(a(0), a(1), a(2))), "built-in")
-    reg.createOrReplaceTempFunction("simhash_sig",
-      Arity.checked("simhash_sig", 3, 3)(a => SimHashSig(a(0), a(1), a(2))), "built-in")
-    reg.createOrReplaceTempFunction("pair_explode",
-      Arity.checked("pair_explode", 2, 2)(a => PairExplode(a(0), a(1))), "built-in")
-  }
+  private[graft] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("poly_hash31", classOf[PolyHash31], Arity.checked("poly_hash31", 1, 1)(a => PolyHash31(a(0)))),
+    ("sliding_min", classOf[SlidingMin], Arity.checked("sliding_min", 2, 2)(a => SlidingMin(a(0), a(1)))),
+    ("minhash_sig", classOf[MinHashSig],
+      Arity.checked("minhash_sig", 3, 3)(a => MinHashSig(a(0), a(1), a(2)))),
+    ("simhash_sig", classOf[SimHashSig],
+      Arity.checked("simhash_sig", 3, 3)(a => SimHashSig(a(0), a(1), a(2)))),
+    ("pair_explode", classOf[PairExplode],
+      Arity.checked("pair_explode", 2, 2)(a => PairExplode(a(0), a(1)))))
+
+  /** Register the same functions as temporary functions, for a session
+    * built without GraftExtensions; idempotent. Sessions from
+    * [[graft.Session]] need no call. perfbench's kernel micro-bench
+    * (`perfbench/src/perfbench/Kernels.scala`) still calls it.
+    */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+    }
 }

@@ -297,7 +297,11 @@ object VectorFunctions {
     ("float_norm", classOf[FloatNorm], Arity.checked("float_norm", 1, 1)(a => FloatNorm(a(0)))),
     ("float_l2sq", classOf[FloatL2Sq], Arity.checked("float_l2sq", 2, 2)(a => FloatL2Sq(a(0), a(1)))))
 
-  /** Register the same functions as temporary functions; idempotent. */
+  /** Register the same functions as temporary functions, for a session
+    * built without GraftExtensions; idempotent. Sessions from
+    * [[graft.Session]] need no call. perfbench's kernel micro-bench
+    * (`perfbench/src/perfbench/Kernels.scala`) still calls it.
+    */
   def register(spark: SparkSession): Unit =
     functions.foreach { case (name, _, build) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")

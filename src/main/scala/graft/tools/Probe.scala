@@ -12,12 +12,16 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * `Probe <time|stages|plan|shuffles> <q1,q2,...|all> [sfDir]`
   *
-  *   - `time`: one untimed warm-up, then the minimum of 3 noop writes
-  *     (cache cleared and GC run after each, as in the bench).
+  *   - `time`: one untimed warm-up, then the minimum of 3 runs, each
+  *     the query's construction (its eager jobs: checkpoints, CC
+  *     rounds, store writes) plus a noop write, printed as the total and
+  *     its two parts (cache cleared and GC run after each, as in the
+  *     bench).
   *   - `stages`: a warm-up, then one instrumented run printing each
   *     stage's executor-run time, input/shuffle volumes, task count and
-  *     slowest task — executor runtime attributes cost to the right side
-  *     of each exchange, which wall-clock timings cannot.
+  *     slowest task (construction's eager stages included), and the
+  *     wall split as in `time` — executor runtime attributes cost to the
+  *     right side of each exchange, which wall-clock timings cannot.
   *   - `plan`: the formatted physical plan (`explain("formatted")`).
   *   - `shuffles`: the shuffle-exchange count of the initial physical
   *     plan, the figure `ShuffleBudgetSpec` pins.
@@ -67,30 +71,36 @@ object Probe {
     } finally spark.stop()
   }
 
-  /** Wall seconds of one full execution (a noop write runs the whole
-    * physical plan, top-level sorts included, without output).
+  /** Wall seconds of building `query` — the eager jobs it runs while
+    * constructing its DataFrame included — and of one full execution of
+    * the result (a noop write runs the whole physical plan, top-level
+    * sorts included, without output).
     */
-  private def noopWrite(df: DataFrame): Double = {
+  private[graft] def constructAndWrite(query: () => DataFrame): (Double, Double) = {
     val t0 = System.nanoTime()
+    val df = query()
+    val t1 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
+    ((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9)
   }
 
   private def time(spark: SparkSession, name: String, query: () => DataFrame): Unit = {
-    def run(): Double = {
-      val dt = noopWrite(query())
+    def run(): (Double, Double) = {
+      val dt = constructAndWrite(query)
       spark.catalog.clearCache()
       System.gc()
       dt
     }
+    def total(r: (Double, Double)): Double = r._1 + r._2
     val warm = run()
     val reps = Seq.fill(3)(run())
-    println(f"[time] $name min ${reps.min}%.2f s  reps " +
-      reps.map(r => f"$r%.2f").mkString(" ") + f"  (warm-up $warm%.2f)")
+    val best = reps.minBy(total)
+    println(f"[time] $name min ${total(best)}%.2f s (construct ${best._1}%.2f + write ${best._2}%.2f)  reps " +
+      reps.map(r => f"${total(r)}%.2f").mkString(" ") + f"  (warm-up ${total(warm)}%.2f)")
   }
 
   private def stages(spark: SparkSession, name: String, query: () => DataFrame): Unit = {
-    noopWrite(query()) // warm-up, unrecorded
+    constructAndWrite(query) // warm-up, unrecorded
     // reclaim the warm-up's shuffle debris before the instrumented run:
     // two back-to-back heavy runs at scale can stack past the disk
     spark.catalog.clearCache()
@@ -122,11 +132,12 @@ object Probe {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val wall = try noopWrite(query()) finally {
+    val (construct, write) = try constructAndWrite(query) finally {
       Thread.sleep(500) // listener bus drains asynchronously
       spark.sparkContext.removeSparkListener(listener)
     }
-    println(f"[stages] $name wall=${wall}%.2f s (1 instrumented run after warm-up)")
+    println(f"[stages] $name wall=${construct + write}%.2f s (construct ${construct}%.2f + " +
+      f"write ${write}%.2f; 1 instrumented run after warm-up)")
     println("[stages] stage  execRun(s)  wall(s)  input(MB)  shufRead(MB)  shufWrite(MB)  tasks  maxTask(s)  name")
     val snap = stages.synchronized(stages.sortBy(_._1).toVector)
     snap.foreach { case (id, er, w, in, sr, sw, nm) =>

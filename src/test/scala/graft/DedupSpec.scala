@@ -749,7 +749,6 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
 
   test("pair_explode law: generator == retained transform form, both modes, fixture AND corpus") {
     import spark.implicits._
-    graft.tensor.TextFunctions.register(spark)
     // round-16 law: the bucket-expansion generator must emit EXACTLY the
     // pair multiset of the HOF form it replaced (within-array i<j pairs
     // and the chunked cross product)

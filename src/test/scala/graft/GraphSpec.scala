@@ -1,10 +1,15 @@
 package graft
 
+import scala.collection.mutable
+import scala.util.Random
+
 import graft.ops.GraphOps
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphSpec extends AnyFunSuite with SparkSuite {
+  import GraphSpec._
 
   test("connected components: chain, clique, and separate pairs resolve to min ids") {
     import spark.implicits._
@@ -67,32 +72,64 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
       s"only $reused ReusedExchange nodes — iteration rounds are re-shuffling")
   }
 
-  test("CC convergence probe rides the checkpoint job: zero extra jobs per round") {
+  test("law: connectedComponents equals a driver-side union-find on random graphs") {
     import spark.implicits._
-    // a 5-node chain converges in exactly THREE rounds (hand-traced in
-    // the scaladoc history: r1 collapses to {1,1,1,2,3}, r2 to all-1, r3
-    // detects no change), so the earlyStop run and a fixed maxIter=3 run
-    // execute the same label-step jobs; the observed-Σcomp probe
-    // (round-13 #8) must add only a constant job overhead: the one-time
-    // initial sum (~2 jobs under AQE) plus the FINAL round's
-    // authoritative confirm aggregate (~2 jobs — round 14: observed
-    // equality is a screen, convergence is declared only after
-    // sumDiffChanged, so retry-inflated observations can never fake
-    // it). The pre-fold protocol paid one aggregate-scan job PER ROUND
-    // on top (≥ fixed + 7 at this round count), which this bound
-    // excludes
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
-    val fixed = jobsIn("cc_jobs_fixed") {
-      GraphOps.connectedComponents(pairs, maxIter = 3, earlyStop = false,
-        dedupe = false).collect(): Unit
+    val prop = Prop.forAll(Gen.choose(0L, Long.MaxValue)) { seed =>
+      val rng = new Random(seed)
+      val edges = randomGraph(rng)
+      val got = GraphOps.connectedComponents(edges.toDF("a", "b"), maxIter = ccRounds(edges),
+        dedupe = rng.nextBoolean()).as[(Long, Long)].collect().toMap
+      got == unionFindMin(edges)
     }
-    val probed = jobsIn("cc_jobs_probed") {
-      GraphOps.connectedComponents(pairs, maxIter = 10, earlyStop = true,
-        dedupe = false).collect(): Unit
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(10).withInitialSeed(11L), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("law: string ids (er2's path) resolve to the union-find minimum string") {
+    import spark.implicits._
+    val prop = Prop.forAll(Gen.choose(0L, Long.MaxValue)) { seed =>
+      // "v<id>" orders lexicographically, not numerically
+      val edges = randomGraph(new Random(seed)).map { case (a, b) => (s"v$a", s"v$b") }
+      val got = GraphOps.connectedComponents(edges.toDF("a", "b"), maxIter = ccRounds(edges),
+        dedupe = false).as[(String, String)].collect().toMap
+      got == unionFindMin(edges)
     }
-    assert(probed <= fixed + 4,
-      s"convergence probe must ride the checkpoint materialization: " +
-        s"fixed-budget run $fixed jobs, earlyStop run $probed (> $fixed + 4)")
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(4).withInitialSeed(13L), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("CC runs exactly its rounds and throws when maxIter is too small") {
+    import spark.implicits._
+    val ids = new Random(5L).shuffle((0L until 10L).toVector)
+    val edges = ids.zip(ids.tail)
+    val rounds = ccRounds(edges)
+    assert(rounds >= 3, s"chain converges in $rounds rounds")
+    val df = edges.toDF("a", "b")
+    assert(GraphOps.connectedComponents(df, maxIter = rounds).as[(Long, Long)].collect().toMap ==
+      unionFindMin(edges))
+    Seq(1, rounds - 1).foreach { maxIter =>
+      val e = intercept[IllegalArgumentException] {
+        GraphOps.connectedComponents(df, maxIter = maxIter)
+      }
+      assert(e.getMessage.contains(s"labels still changing after $maxIter rounds"), e.getMessage)
+    }
+  }
+
+  test("CC loop: each extra round costs the same constant number of jobs") {
+    import spark.implicits._
+    // chains in id order: round k leaves label v − (2^(k+1) − 2), so
+    // chains of 3, 7 and 15 vertices converge one round apart
+    val chains = Seq(3L, 7L, 15L).map(n => (1L until n).map(v => (v, v + 1)))
+    assert(chains.map(ccRounds(_)) == Seq(2, 3, 4))
+    val jobs = chains.zipWithIndex.map { case (edges, i) =>
+      val df = edges.toDF("a", "b")
+      jobsIn(s"cc_jobs_$i")(GraphOps.connectedComponents(df, dedupe = false).collect(): Unit)
+    }
+    val perRound = jobs(1) - jobs(0)
+    assert(perRound > 0 && jobs(2) - jobs(1) == perRound,
+      s"jobs for 2, 3, 4 rounds: ${jobs.mkString(", ")}")
+    // two checkpoints (each a few AQE stage jobs) and one isEmpty job
+    assert(perRound <= 10, s"$perRound jobs per round")
   }
 
   test("g1: integer arithmetic makes reruns bit-identical") {
@@ -101,5 +138,77 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
     val b = SparkEntry.queries("g1_pagerank")(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(a.sameElements(b), "pagerank reruns disagree")
+  }
+}
+
+object GraphSpec {
+  /** At most 5 components over at most 300 of the ids 0..999: chains of
+    * up to 60 vertices (ids in order along the chain, either way round,
+    * shuffled inside blocks of up to 4), chains of up to 10 with ids in
+    * random order, cliques of up to 8 and sparse random pieces of up to
+    * 25, plus repeated edges, reversed repeats and self-loops, every edge
+    * in random orientation. Sized to converge in at most ~10 rounds: the
+    * loop's checkpoint size estimate squares every round, and past ~15
+    * rounds the planner's BigInt arithmetic alone takes minutes (a
+    * random-order 60-chain needs up to 47 rounds).
+    */
+  def randomGraph(rng: Random): Seq[(Long, Long)] = {
+    val ids = rng.shuffle((0L until 1000L).toVector).iterator
+    def take(n: Int) = Vector.fill(n)(ids.next())
+    def path(v: Seq[Long]) = v.zip(v.tail)
+    val edges = (1 to 1 + rng.nextInt(5)).flatMap { _ =>
+      rng.nextInt(4) match {
+        case 0 =>
+          val sorted = take(2 + rng.nextInt(59)).sorted
+          val v = if (rng.nextBoolean()) sorted else sorted.reverse
+          path(Iterator.unfold(v)(r => Option.when(r.nonEmpty) {
+            val k = 1 + rng.nextInt(4)
+            (rng.shuffle(r.take(k)), r.drop(k))
+          }).flatten.toVector)
+        case 1 => path(take(2 + rng.nextInt(9)))
+        case 2 => take(2 + rng.nextInt(7)).combinations(2).map(p => (p(0), p(1)))
+        case _ =>
+          val v = take(2 + rng.nextInt(24))
+          Vector.fill(v.length)((v(rng.nextInt(v.length)), v(rng.nextInt(v.length))))
+      }
+    }
+    val repeats = Seq.fill(rng.nextInt(10))(edges(rng.nextInt(edges.length)))
+    val loops = Seq.fill(rng.nextInt(3)) { val v = edges(rng.nextInt(edges.length))._1; (v, v) }
+    rng.shuffle(edges ++ repeats ++ loops).map(e => if (rng.nextBoolean()) e.swap else e)
+  }
+
+  /** Component minimum of every edge endpoint. Union by smaller root
+    * keeps each root its set's minimum.
+    */
+  def unionFindMin[T](edges: Seq[(T, T)])(implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = mutable.Map[T, T]()
+    def find(v: T): T = {
+      val p = parent.getOrElseUpdate(v, v)
+      if (p == v) v else { val r = find(p); parent(v) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ord.lt(ra, rb)) parent(rb) = ra else if (ord.lt(rb, ra)) parent(ra) = rb
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  /** Rounds `GraphOps.connectedComponents` runs on `edges`, the final
+    * no-change round included: the same neighbor-min step and single
+    * pointer jump, replayed on the driver.
+    */
+  def ccRounds[T](edges: Seq[(T, T)])(implicit ord: Ordering[T]): Int = {
+    val adj = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+    var label = adj.keys.map(v => v -> v).toMap
+    var rounds = 0
+    var changed = true
+    while (changed) {
+      val stepped = label.map { case (v, l) => v -> (l +: adj(v).map(label)).min }
+      val next = stepped.map { case (v, l) => v -> ord.min(l, stepped(l)) }
+      changed = next != label
+      label = next
+      rounds += 1
+    }
+    rounds
   }
 }

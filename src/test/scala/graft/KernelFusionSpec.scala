@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.KernelFusionRule
-import graft.quality.SimilarityOps
 import graft.tensor.{FloatDot, FloatL2Sq, FloatNorm}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,8 +10,8 @@ class KernelFusionSpec extends AnyFunSuite with SparkSuite {
   test("rule rewrites HOF dot/norm patterns into the codegen kernels") {
     val e = Tables(spark, sf, "embeddings")
     val df = e.select(
-      SimilarityOps.dotHof(col("embedding"), col("embedding")).as("d"),
-      SimilarityOps.l2normHof(col("embedding")).as("n"))
+      RetainedForms.dotHof(col("embedding"), col("embedding")).as("d"),
+      RetainedForms.l2normHof(col("embedding")).as("n"))
     val before = df.queryExecution.analyzed
     assert(!before.expressions.exists(_.exists(_.isInstanceOf[FloatDot])))
     val after = KernelFusionRule(before)
@@ -23,7 +22,7 @@ class KernelFusionSpec extends AnyFunSuite with SparkSuite {
   test("rule rewrites the HOF squared-L2 pattern into FloatL2Sq, results unchanged") {
     val e = Tables(spark, sf, "embeddings")
     val df = e.select(col("vec_id"),
-      SimilarityOps.l2sqHof(col("embedding"), reverse(col("embedding"))).as("d"))
+      RetainedForms.l2sqHof(col("embedding"), reverse(col("embedding"))).as("d"))
     val before = df.queryExecution.analyzed
     assert(!before.expressions.exists(_.exists(_.isInstanceOf[FloatL2Sq])))
     val after = KernelFusionRule(before)
@@ -68,7 +67,7 @@ class KernelFusionSpec extends AnyFunSuite with SparkSuite {
     // form plans straight into the kernel…
     val e = Tables(spark, sf, "embeddings")
     val df = e.select(col("vec_id"),
-      SimilarityOps.dotHof(col("embedding"), col("embedding")).as("d"))
+      RetainedForms.dotHof(col("embedding"), col("embedding")).as("d"))
     val plan = df.queryExecution.optimizedPlan.toString
     assert(plan.toLowerCase.contains("floatdot") || plan.contains("float_dot"), plan)
     // …and the kernel's fold is bit-identical to an independent

@@ -1,6 +1,6 @@
 package graft
 
-import graft.tensor.{PolyHash31, TextFunctions}
+import graft.tensor.PolyHash31
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -32,7 +32,6 @@ class PolyHashSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("law: codegen and interpreted paths agree through SQL") {
-    TextFunctions.register(spark)
     import spark.implicits._
     val strs = cases(50).filter(_.nonEmpty)
     val got = strs.toDF("s")

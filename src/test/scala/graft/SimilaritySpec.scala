@@ -42,7 +42,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   }
 
   test("MIPS ANN scores raw inner products and overlaps the exact MIPS top-k") {
-    graft.tensor.VectorFunctions.register(spark)
     // exact all-pairs inner products for the 10 query rows (small table;
     // the spec's ground truth, not a query path)
     val base = Tables(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
@@ -111,7 +110,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // ADC is an 8-centroid/subspace approximation — recall against the
     // exact squared-L2 top-10 is inherently partial; require it beats a
     // random baseline by a wide margin (10/499 expected ≈ 0.6 of 30).
-    graft.tensor.VectorFunctions.register(spark)
     val e = Tables(spark, sf, "embeddings")
     val q = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
@@ -151,7 +149,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // sf0.01 (random baseline ≈ 0.6 of 30). Bound at 6 — nn5's own bar —
     // so a broken residual frame (which collapses recall toward random)
     // fails loudly while a regenerated corpus passes.
-    graft.tensor.VectorFunctions.register(spark)
     val e = Tables(spark, sf, "embeddings")
     val q = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
@@ -221,7 +218,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // independent recomputation of the pairwise rule on the REAL fixture:
     // dup(i) ⇔ max cosine to any lower-id same-cluster vector ≥ τ,
     // via a groupBy-max plan instead of the distinct-join the operator uses
-    graft.tensor.VectorFunctions.register(spark)
     val b = Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"),
         SimilarityOps.l2norm(col("embedding")).as("nrm"))
@@ -264,7 +260,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
 
   private def assertMomentsLaw(df: org.apache.spark.sql.DataFrame): Unit = {
     val k = covKernel(df)
-    val e = SimilarityOps.covMomentsByExplode(df).collect()(0)
+    val e = RetainedForms.covMomentsByExplode(df).collect()(0)
     assert(k.getLong(0) == e.getLong(0), "total row count differs")
     val cnts = e.getSeq[Long](1)
     assert(cnts.forall(_ == k.getLong(1)),

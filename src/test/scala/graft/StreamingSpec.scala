@@ -224,7 +224,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // batch twin: the window-ranked assignment exactly as knnIvf builds
     // it — over the LLOYD-REFINED centroids (the actual inverted file)
-    graft.tensor.VectorFunctions.register(spark)
     val base = graft.Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"),
         quality.SimilarityOps.l2norm(col("embedding")).as("nrm"))

@@ -93,7 +93,6 @@ class TensorPropertySpec extends AnyFunSuite with SparkSuite {
     // The kernels' arithmetic contract (left-to-right double-widened fold)
     // against a plain Scala model, over arbitrary values — the property
     // the DuckDB oracle parity of every similarity query rests on.
-    graft.tensor.VectorFunctions.register(spark)
     import spark.implicits._
     val pairGen: Gen[(Array[Float], Array[Float])] = for {
       n <- Gen.choose(1, 64)

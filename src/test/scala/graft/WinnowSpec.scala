@@ -31,7 +31,6 @@ class WinnowSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("sliding_min kernel == the HOF window-min form, value for value") {
-    graft.tensor.TextFunctions.register(spark)
     // the real corpus at sf (every document length/shape), both forms
     // computed side by side — the drift pin for the O(n) deque kernel
     val both = Tables(spark, sf, "documents")
