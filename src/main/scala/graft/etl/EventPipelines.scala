@@ -83,27 +83,20 @@ object EventPipelines {
 
   /** The §3.3 aggregation grain over a long voxel view carrying an
     * `instance` column (given labels for [[instanceTable]], CC-derived
-    * for [[instanceTableCC]]): majority-vote ssnet label per instance
-    * (ties → lowest), member coords re-encoded flatten+shape,
-    * canonically sorted so output is deterministic under shuffle.
+    * for [[instanceTableCC]]): one aggregation per instance takes the
+    * majority-vote ssnet label (ties → lowest; a null label does not
+    * vote) and the members, canonically sorted so output is
+    * deterministic under shuffle and re-encoded flatten+shape.
     */
-  private def aggregateInstances(long: DataFrame): DataFrame = {
-    val labelW = Window.partitionBy("run", "subrun", "event", "instance")
-    val labels = long.groupBy("run", "subrun", "event", "instance", "ssnet")
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(labelW.orderBy(col("cnt").desc, col("ssnet").asc)))
-      .filter(col("rn") === 1)
-      .select(col("run"), col("subrun"), col("event"), col("instance"),
-        col("ssnet").as("label"))
-    val clusters = long
-      .groupBy("run", "subrun", "event", "instance")
-      .agg(array_sort(collect_list(struct(col("i"), col("x"), col("y"), col("z")))).as("pts"))
+  private[graft] def aggregateInstances(long: DataFrame): DataFrame =
+    long.groupBy("run", "subrun", "event", "instance")
+      .agg(array_sort(collect_list(struct(col("i"), col("x"), col("y"), col("z")))).as("pts"),
+        mode(col("ssnet"), deterministic = true).as("label"))
       .select(col("run"), col("subrun"), col("event"), col("instance"),
         flatten(transform(col("pts"),
           p => array(p.getField("x"), p.getField("y"), p.getField("z")))).as("instvoxcoord"),
-        array(size(col("pts")).cast("long"), lit(3L)).as("instvoxcoord_shape"))
-    clusters.join(labels, Seq("run", "subrun", "event", "instance"))
-  }
+        array(size(col("pts")).cast("long"), lit(3L)).as("instvoxcoord_shape"),
+        col("label"))
 
   /** §3.3 derived-table pipeline (voxel_to_instance_data.py): voxel event
     * table → instance-cluster table, grouped by the GIVEN instance label.

@@ -356,8 +356,8 @@ object AggOps extends OpModule {
     // at EVERY scale factor, so the instance structure is SF-robust
     // where a binned price/quantity grid saturates into one blob.
     // Adjacency is an EQUI-join on shifted coordinates — never a
-    // distance cross product — CC runs on occupied cells only with
-    // pointer jumping, and isolated cells label themselves. The oracle
+    // distance cross product — CC runs on occupied cells only, and
+    // isolated cells label themselves. The oracle
     // is the recursive min-reachability CTE over the identical grid; its
     // adjacency is spelled as UNION ALL of two equi-joins because an
     // OR-of-conjunctions ON clause denies DuckDB a hash join and goes
@@ -384,7 +384,7 @@ object AggOps extends OpModule {
       (s, dir) => {
         // Packed SINGLE-COLUMN ids BEFORE the distinct/checkpoint
         // (applied after the round-12 stage profile): every downstream
-        // consumer — both shift joins, each CC round, the final label
+        // consumer — both shift joins, CC's input, the final label
         // join — re-reads this set, and
         // carrying (ix, iy) beside id tripled the checkpoint (5.4 GB at
         // sf10) and every exchange built from it; the packing is
@@ -446,10 +446,11 @@ object AggOps extends OpModule {
         // CC runs over CONNECTED cells only (labels init from edge
         // endpoints — at sf1.0 ~0.7 M of 5.6 M cells); isolated cells
         // self-label once in the left-join coalesce below. Seeding CC
-        // with the full cell set instead was tried and REVERTED: it
-        // dragged the 5.6 M isolated cells through every round's joins
-        // and checkpoints — 1.8× the whole query (976 vs 541 s sf1.0
-        // executor).
+        // with the full cell set instead was tried and REVERTED (1.8×
+        // the whole query, 976 vs 541 s sf1.0 executor). Packed ids keep
+        // grid neighbours near in value, so CC's range partitions hold
+        // whole bands of the grid and only components crossing a band
+        // boundary reach a contracted level.
         val comp = GraphOps.connectedComponents(
           shiftEdges(1000000L, guardWrap = false)
             .union(shiftEdges(1L, guardWrap = true)),

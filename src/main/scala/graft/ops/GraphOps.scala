@@ -1,8 +1,11 @@
 package graft.ops
 
 import graft.{OpModule, Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Distributed graph primitives over edge-list DataFrames — the engine's
   * answer to the reference's graph step (radius_graph + scatter
@@ -14,12 +17,12 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps extends OpModule {
 
-  /** Eager plan truncation for the CC path's iterate/edge tables, with
+  /** Eager plan truncation for the CC path's edge and label tables, with
     * a CALLER-CHOSEN storage level (round 14). The default
     * localCheckpoint level is MEMORY_AND_DISK — deserialized row
     * objects whose real heap footprint the storage accounting
     * underestimates, and at sf100 (600 M distinct grid cells, a new
-    * label checkpoint per round) that slack OOM'd v7's single-node runs
+    * label checkpoint per iteration round) that slack OOM'd v7's single-node runs
     * 3-of-4 at a 100 g heap while the same query passed under luckier
     * task scheduling. MEMORY_AND_DISK_SER stores compact byte buffers
     * the accountant measures exactly, so eviction happens instead of
@@ -31,122 +34,111 @@ object GraphOps extends OpModule {
     * deserialized by default (every sf≤10 shape keeps its r13 plan and
     * cost), serialized where the caller knows the working set threatens
     * the heap (v7 gates on the scanned corpus size — the sf100
-    * regime, where survival beats the ser tax). The carried size
-    * ESTIMATE (load-bearing for each round's broadcast decision, see
-    * the revert note below) is storage-level independent.
+    * regime, where survival beats the ser tax).
     */
   private[graft] def ckpt(df: DataFrame, ser: Boolean): DataFrame =
     df.localCheckpoint(true,
       if (ser) org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
       else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** Connected components by iterative min-label propagation: each
-    * round every vertex adopts the smallest label among itself and its
-    * neighbors (one equi-join + one aggregation, both keyed by vertex
-    * id), then its label's own label (one pointer jump). The edge side
-    * can bucket by vertex id so the per-round join plans exchange-free
-    * (BucketingSpec's PageRank-round pin, PLANS.md "bucketed
-    * iterative-join round").
+  /** Connected components by range-local union-find, one level at a
+    * time (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC 2014). A level range-partitions the edges by their
+    * smaller endpoint and runs a union-find over each partition's edges
+    * ([[localRoots]]), giving every vertex the smallest id of its local
+    * component, its local root. A vertex seen by several partitions
+    * gets several roots; edges from its smallest root r0 to the others
+    * form the contracted graph, solved by the next level. A vertex's
+    * component is the contracted component of its r0, else r0.
     *
-    * Each round's final checkpoint carries `changed = comp <> prev`
-    * (`prev` = the round's input label); the loop stops after the first
-    * round with no changed row — one plain `isEmpty` job over the cached
-    * checkpoint, exact under task retry and for any orderable id type.
-    * Exhausting `maxIter` with labels still changing throws.
+    * Range keys keep ids near in value in one partition — v7's grid
+    * cells, packed voxel ids, chains in id order — so such graphs, and
+    * any input small enough for AQE to coalesce its range partitions
+    * into one, finish in one level. All contracted edges of a shared
+    * vertex share the key r0, so they meet at the next level; and the
+    * largest vertex is never a local root, so past the first level
+    * (whose self-loops may make it one) every level shrinks the graph.
+    * The labelling is the minimum vertex id for any id type Spark orders.
     *
-    * Labels initialize from the EDGE ENDPOINTS, never from a full vertex
-    * set: isolated vertices never change, and dragging them through
-    * every round measured 1.8× the whole v7 query (976 vs 541 s
-    * executor, sf1.0); callers left-join + coalesce them once instead.
+    * Labels come from the EDGE ENDPOINTS, never from a full vertex set:
+    * callers left-join + coalesce their isolated vertices once instead
+    * (dragging them through the iteration measured 1.8× the whole v7
+    * query, 976 vs 541 s executor, sf1.0).
     *
-    * @param pairs undirected edges (a, b)
-    * @param maxIter runaway bound on the rounds, the confirming
-    *   no-change round included
-    * @param dedupe distinct() the symmetrized edge list first. Duplicate
-    *   edges do not change a min, so this is purely a performance trade:
-    *   it pays off for LSH pair lists that repeat pairs, and is a wasted
+    * @param pairs undirected edges (a, b), both endpoints of one type
+    * @param maxIter runaway bound on the levels; a graph still
+    *   contracting after `maxIter` levels throws
+    * @param dedupe distinct() the input pairs first. Duplicates do not
+    *   change a union-find, so this is purely a performance trade: it
+    *   pays off for LSH pair lists that repeat pairs, and is a wasted
     *   full-edge shuffle for duplicate-free inputs (772 s of v7's 4732 s
     *   sf10 executor profile).
     * @param serCkpt checkpoint storage level, see [[ckpt]]
-    * @return (id, comp) — comp is the minimum vertex id of the component
+    * @return (id, comp) — comp is the minimum vertex id of the
+    *   component; a checkpoint, or a projection of one
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
       dedupe: Boolean = true, serCkpt: Boolean = false): DataFrame = {
-    // localCheckpoint (not cache): each round's plan must be TRUNCATED,
-    // or the logical plan doubles every iteration and analysis time
-    // explodes — the standard iterative-DataFrame trap. The INPUT pair
-    // list is truncated FIRST: the symmetrize union reads it twice, and
-    // callers hand this function their most expensive subtree (dd6/dd7's
-    // LSH bucket expansion, v7's shifted-coordinate joins) — without
-    // the cut, that subtree executes once per union branch (measured as
-    // two full ~4 s pair-generation stages in dd6's sf1.0 profile).
-    val sym = ckpt(pairs.select(col("a"), col("b")), serCkpt)
-    val symmetrized = sym
-      .union(sym.select(col("b").as("a"), col("a").as("b")))
-    // dedupe=false also skips the edge MATERIALIZATION: the union over
-    // the sym checkpoint re-reads it twice per consumer — the same bytes
-    // a deduped-checkpoint read would cost, minus one full write.
-    val edges = if (dedupe) ckpt(symmetrized.distinct(), serCkpt)
-      else symmetrized
-    var labels = ckpt(edges.select(col("a").as("id")).distinct()
-      .withColumn("comp", col("id")), serCkpt)
-    var rounds = 0
-    var changed = true
-    while (changed) {
-      require(rounds < maxIter,
+    // the input is truncated first: the range partitioner's sample and
+    // the shuffle both read it, and callers hand this function their
+    // most expensive subtree (dd6/dd7's LSH bucket expansion, v7's
+    // shifted-coordinate joins), which would otherwise run twice
+    val edges = pairs.select(col("a"), col("b"))
+    componentLevel(ckpt(if (dedupe) edges.distinct() else edges, serCkpt), 1, maxIter, serCkpt)
+  }
+
+  /** One level of [[connectedComponents]] over `edges` (a, b). */
+  private def componentLevel(edges: DataFrame, level: Int, maxIter: Int,
+      ser: Boolean): DataFrame = {
+    val t = edges.schema("a").dataType
+    val local = edges.repartitionByRange(least(col("a"), col("b")))
+      .mapPartitions(localRoots(t))(Encoders.row(
+        StructType(Seq(StructField("id", t), StructField("root", t)))))
+    val roots = ckpt(local.groupBy("id")
+      .agg(array_sort(collect_set("root")).as("roots")), ser)
+    val r0 = element_at(col("roots"), 1)
+    val own = roots.select(col("id"), r0.as("comp"))
+    // no checkpoint: a filter and explode over the cached roots, read
+    // by the next level's range sample and shuffle
+    val contracted = roots.filter(size(col("roots")) > 1)
+      .select(r0.as("a"), explode(slice(col("roots"), 2, Int.MaxValue)).as("b"))
+    if (contracted.isEmpty) own
+    else {
+      require(level < maxIter,
         s"connectedComponents: labels still changing after $maxIter rounds " +
-          "(graph diameter exceeds the budget — raise maxIter)")
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "b2"), col("b") === col("b2"))
-        .groupBy(col("a").as("id"))
-        .agg(min("comp").as("ncomp"))
-      // truncated BEFORE the pointer-jump self-join: its two sides
-      // shuffle on different keys (comp vs id), so exchange reuse cannot
-      // merge them and the edge join + aggregation above — the expensive
-      // half of the round — would execute twice (measured as two full
-      // label-size scans per round in v7's sf10 profile)
-      val stepped = ckpt(labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"),
-          col("comp").as("prev")), serCkpt)
-      // pointer jumping: adopt the label's own label too — chains collapse
-      // in O(log diameter) rounds instead of O(diameter).
-      //
-      // Two round-12 variants were measured at sf10 (dd6, 13 rounds)
-      // and BOTH reverted — recorded so they are not retried:
-      // - TWO jumps per round (to halve the edge rounds): did not
-      //   reduce the measured round count at all (the rounds are
-      //   edge-relaxation-bound, not label-chain-bound) and the extra
-      //   label-size job per round read 29.6 s vs 27.8.
-      // - RELEAFING the jump checkpoint to reset its size estimate
-      //   (localCheckpoint carries the child plan's estimate onto the
-      //   new leaf, and a self-join ~squares it, so the planner
-      //   multiplies ever-wider BigInts round over round — the
-      //   two-jump variant, a fourth power per round, hung the driver
-      //   in BigInteger.multiplyToomCook3): catastrophic, 27.8 →
-      //   123.5 s wall / 302 → 2829 s executor. The carried estimate
-      //   is LOAD-BEARING — it is what keeps the label side
-      //   broadcastable in each round's edge⋈labels join; a fresh
-      //   leaf's conservative default estimate forfeits exactly those
-      //   broadcasts and every round pays a full edge-table shuffle.
-      //   At one jump per round the estimate-width growth is ~2^rounds
-      //   digits — tens of KB of BigInt by round 13, tolerable planner
-      //   arithmetic — and the broadcasts it preserves are worth far
-      //   more. A fixed-point estimate reset (releaf with HONEST
-      //   computed stats) would need a count+size job per round, the
-      //   same cost class it saves.
-      val jumped = least(col("x.comp"), coalesce(col("y.ccomp"), col("x.comp")))
-      val next = ckpt(stepped.as("x")
-        .join(stepped.select(col("id").as("cid"), col("comp").as("ccomp")).as("y"),
-          col("x.comp") === col("y.cid"), "left")
-        .select(col("x.id").as("id"), jumped.as("comp"),
-          (jumped =!= col("x.prev")).as("changed")), serCkpt)
-      changed = !next.filter(col("changed")).isEmpty
-      labels = next.select(col("id"), col("comp"))
-      rounds += 1
+          "(the graph needs more levels than the budget — raise maxIter)")
+      val up = componentLevel(contracted, level + 1, maxIter, ser)
+        .select(col("id").as("r0"), col("comp").as("up"))
+      // a checkpoint, so the caller's plan stays one scan deep
+      ckpt(own.join(up, col("comp") === col("r0"), "left")
+        .select(col("id"), coalesce(col("up"), col("comp")).as("comp")), ser)
     }
-    labels
+  }
+
+  /** `(id, root)` for every vertex of one partition's edges `(a, b)`:
+    * `root` is the smallest id of the vertex's component among these
+    * edges. A vertex is its index in the sorted distinct ids (primitive
+    * for Long ids, Spark's own ordering otherwise), so
+    * [[MinUnionFind]]'s smallest-index roots are smallest-id roots.
+    */
+  private def localRoots(t: DataType)(rows: Iterator[Row]): Iterator[Row] = {
+    // ends(2e + k) = the index of edge e's endpoint k
+    val (n, ends, id) = t match {
+      case LongType =>
+        val ends = rows.flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toArray
+        val ids = java.util.Arrays.stream(ends).sorted().distinct().toArray
+        (ids.length, ends.map(java.util.Arrays.binarySearch(ids, _)), (i: Int) => ids(i): Any)
+      case _ =>
+        val ord = PhysicalDataType.ordering(t).asInstanceOf[Ordering[AnyRef]]
+        val ends = rows.flatMap(r => Iterator(r.get(0), r.get(1)))
+          .map(CatalystTypeConverters.convertToCatalyst(_).asInstanceOf[AnyRef]).toArray
+        val ids = ends.distinct.sorted(ord)
+        (ids.length, ends.map(java.util.Arrays.binarySearch(ids, _, ord)),
+          (i: Int) => CatalystTypeConverters.convertToScala(ids(i), t))
+    }
+    val uf = new MinUnionFind(n)
+    for (e <- 0 until ends.length / 2) uf.union(ends(2 * e), ends(2 * e + 1))
+    Iterator.range(0, n).map(i => Row(id(i), id(uf.find(i))))
   }
 
   /** Rank mass is carried in integer micro-units of 1e-12 so every
@@ -403,4 +395,23 @@ object GraphOps extends OpModule {
       (s, dir) => bfsHops(bucketedTradeEdges(s, dir), source = 0L,
         rounds = BfsRounds, truncateEdges = false).orderBy("node_id"))
   )
+}
+
+/** Union-find over the indices `0 until n` whose roots are always the
+  * smallest index of their set: over indices into sorted distinct ids,
+  * a root is its component's minimum id.
+  */
+final class MinUnionFind(n: Int) {
+  private val parent = Array.range(0, n)
+
+  def find(a: Int): Int = {
+    var r = a
+    while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+    r
+  }
+
+  def union(a: Int, b: Int): Unit = {
+    val (x, y) = (find(a), find(b))
+    if (x != y) parent(math.max(x, y)) = math.min(x, y)
+  }
 }

@@ -96,12 +96,12 @@ object DedupOps extends OpModule {
     * to end on the sketch queries).
     */
   private def tokenCodes(s: SparkSession, dir: String): DataFrame =
-    tokenCodesOf(s, Tables(s, dir, "documents"))
+    tokenCodesOf(Tables(s, dir, "documents"))
 
   /** As [[tokenCodes]] but over an arbitrary (doc_id, text, …) frame —
     * the incremental-dedup path hashes snapshot slices, not whole tables.
     */
-  private def tokenCodesOf(s: SparkSession, docs: DataFrame): DataFrame = {
+  private def tokenCodesOf(docs: DataFrame): DataFrame = {
     // explode_OUTER + null filter on the GENERATED column, not plain
     // explode: InferFiltersFromGenerate would add a pushed-down
     // `size(array_distinct(split(...))) > 0` scan filter that tokenizes
@@ -131,7 +131,7 @@ object DedupOps extends OpModule {
     * between stages just the same.
     */
   def minhashSignatures(s: SparkSession, dir: String): DataFrame =
-    minhashSignaturesOf(s, Tables(s, dir, "documents"))
+    minhashSignaturesOf(Tables(s, dir, "documents"))
 
   /** As [[minhashSignatures]] but over an arbitrary (doc_id, text, …)
     * frame (snapshot slices in [[incrementalVerdicts]]).
@@ -146,7 +146,7 @@ object DedupOps extends OpModule {
     * edge keeps the explode path's semantics: such docs are absent from
     * the signature table.
     */
-  def minhashSignaturesOf(s: SparkSession, docs: DataFrame): DataFrame = {
+  def minhashSignaturesOf(docs: DataFrame): DataFrame = {
     docs.select(col("doc_id"),
       call_function("minhash_sig",
         array_distinct(split(trim(col("text")), "\\s+")),
@@ -359,7 +359,7 @@ object DedupOps extends OpModule {
     *
     * Unlike [[minhashPairs]] (one execution — AQE exchange reuse shares
     * the clique subtree), this pipeline spans MULTIPLE executions: the
-    * CC rounds checkpoint-materialize the rep graph, then the final
+    * CC levels checkpoint-materialize the rep graph, then the final
     * member join traverses cliques again. Exchange reuse cannot cross
     * executions, so here the clique table IS cached — and RELEASED before
     * returning: the member table (the cache's last consumer) is eagerly
@@ -563,7 +563,7 @@ object DedupOps extends OpModule {
     * math). Null-text docs keep their row with a null sig here (the
     * stream decides how to verdict them); the batch path filters them.
     */
-  def minhashSigsPerRow(s: SparkSession, docs: DataFrame): DataFrame = {
+  def minhashSigsPerRow(docs: DataFrame): DataFrame = {
     docs.select(col("doc_id"),
       call_function("minhash_sig",
         array_distinct(split(trim(col("text")), "\\s+")),
@@ -627,7 +627,7 @@ object DedupOps extends OpModule {
     val exact = docs
       .select(md5(col("text")).as("text_md5"), col("doc_id"))
       .groupBy("text_md5").agg(min("doc_id").as("ref_id"))
-    val sigs = minhashSignaturesOf(s, docs).localCheckpoint(true)
+    val sigs = minhashSignaturesOf(docs).localCheckpoint(true)
     (exact, sigs, bandKeysOf(sigs))
   }
 
@@ -1009,7 +1009,7 @@ object DedupOps extends OpModule {
       Seq("band", "bkey"), "left_semi")
     // Tokenize only the docs that survived exact dedup: the semi-join
     // runs BEFORE signature computation, so exact dups are never hashed.
-    val sigsNew = minhashSignaturesOf(s,
+    val sigsNew = minhashSignaturesOf(
         newDocs.join(rem1.select("doc_id"), Seq("doc_id"), "left_semi"))
       .localCheckpoint(true)
     val agree = expr(
@@ -1344,7 +1344,7 @@ object DedupOps extends OpModule {
     * side of every probe, batch ([[bloomVerdicts]]) or streaming
     * ([[graft.streaming.DedupStream.bloomGate]]).
     */
-  def bloomWordsRow(s: SparkSession, prior0: DataFrame, mBits: Int = 4096): DataFrame = {
+  def bloomWordsRow(prior0: DataFrame, mBits: Int = 4096): DataFrame = {
     val nWords = mBits / 32 // 32-bit words: shift stays sign-safe in BIGINT
     prior0.select(expr("poly_hash31(text)").as("h"))
       .select(explode(bloomPositions(mBits)).as("pos"))
@@ -1357,7 +1357,7 @@ object DedupOps extends OpModule {
 
   def bloomVerdicts(s: SparkSession, prior0: DataFrame, fresh0: DataFrame,
       mBits: Int = 4096): DataFrame = {
-    val wordsRow = bloomWordsRow(s, prior0, mBits)
+    val wordsRow = bloomWordsRow(prior0, mBits)
     val priorHashes = prior0.select(md5(col("text")).as("pm")).distinct()
     fresh0.select(col("doc_id"), col("text"), expr("poly_hash31(text)").as("h"))
       .select(col("doc_id"), bloomPositions(mBits).as("ps"), md5(col("text")).as("fm"))
@@ -1631,7 +1631,7 @@ object DedupOps extends OpModule {
     // collapse → rep-graph LSH pairs → connected components on the rep
     // graph only → members inherit labels. One row per document. The
     // oracle recomputes the components with a recursive min-reachability
-    // CTE — an independent check of the distributed pointer-jumping CC.
+    // CTE — an independent check of the distributed union-find CC.
     Q("dd6_dedup_clusters", Some(dd6OracleSql),
       (s, dir) => dedupClusters(s, dir, minEstJaccard = 0.95)),
 

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * surviving pair back to the two (small) per-name trigram SETS and
   * computes exact Jaccard with set intersect/union sizes — integer
   * arithmetic, fully DuckDB-oracled. Clustering reuses the distributed
-  * pointer-jumping CC of [[graft.ops.GraphOps]]; the oracle recomputes
+  * union-find CC of [[graft.ops.GraphOps]]; the oracle recomputes
   * components with a recursive min-reachability CTE.
   */
 object EntityOps extends OpModule {

@@ -702,7 +702,7 @@ object SimilarityOps extends OpModule {
     // family: dd6 clusters by token sketches, dd7 by embedding geometry.
     // The oracle replays the edges arithmetically and the components with
     // a recursive min-reachability CTE — independently checking the
-    // pointer-jumping CC a second time on a different graph.
+    // union-find CC a second time on a different graph.
     Q("dd7_embedding_clusters", Some(
       """WITH RECURSIVE e AS (
         |  SELECT vec_id, embedding,

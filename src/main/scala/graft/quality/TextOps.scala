@@ -53,7 +53,7 @@ object TextOps extends OpModule {
     */
   def winnowFingerprints(s: org.apache.spark.sql.SparkSession, dir: String,
       k: Int = 8, w: Int = 16): org.apache.spark.sql.DataFrame =
-    winnowFingerprintsOf(s, Tables(s, dir, "documents"), k, w)
+    winnowFingerprintsOf(Tables(s, dir, "documents"), k, w)
 
   /** As [[winnowFingerprints]] over an arbitrary (doc_id, text, …) frame.
     * Callers that need a globally ORDERED result should sort the INPUT
@@ -66,8 +66,7 @@ object TextOps extends OpModule {
     * computes the expensive projection exactly once, order preserved
     * (a per-row projection never reorders).
     */
-  def winnowFingerprintsOf(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame,
+  def winnowFingerprintsOf(docs: org.apache.spark.sql.DataFrame,
       k: Int = 8, w: Int = 16): org.apache.spark.sql.DataFrame = {
     // poly_hash31(substring(text, i, k)) == the per-char Horner fold over
     // positions i..i+k−1 whenever i+k−1 ≤ length(text) — true for every
@@ -115,8 +114,7 @@ object TextOps extends OpModule {
     * the cut list is strictly increasing; all map-side HOF work.
     * TextOpsSpec uses it directly to pin the re-synchronization law.
     */
-  def cdcChunkTable(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def cdcChunkTable(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     docs
       .withColumn("hs", expr(
         "transform(sequence(1, greatest(1, length(text) - 7)), i -> poly_hash31(substring(text, i, 8)))"))
@@ -282,7 +280,7 @@ object TextOps extends OpModule {
     // sorting the raw rows costs one text-sized exchange and the
     // per-row projection preserves the order.
     Q("x5_winnow_fingerprint", Some(winnowOracleSql),
-      (s, dir) => winnowFingerprintsOf(s,
+      (s, dir) => winnowFingerprintsOf(
           Tables(s, dir, "documents").orderBy("doc_id"))
         .select(col("doc_id"),
           size(col("fps")).cast("long").as("n_fps"),
@@ -750,7 +748,7 @@ object TextOps extends OpModule {
       (s, dir) => {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("h").orderBy("doc_id", "st")
-        cdcChunkTable(s, Tables(s, dir, "documents"))
+        cdcChunkTable(Tables(s, dir, "documents"))
           .withColumn("rn", row_number().over(w))
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_chunks"),

@@ -110,7 +110,7 @@ object DedupStream {
     */
   def bloomGate(spark: SparkSession, prior: DataFrame, streamDir: String,
       mBits: Int = 4096): DataFrame = {
-    val wordsLocal: Seq[Long] = graft.quality.DedupOps.bloomWordsRow(spark, prior, mBits)
+    val wordsLocal: Seq[Long] = graft.quality.DedupOps.bloomWordsRow(prior, mBits)
       .head().getAs[scala.collection.Seq[Long]]("words").toSeq
     spark.readStream
       .schema(docSchema)

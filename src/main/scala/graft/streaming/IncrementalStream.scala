@@ -50,7 +50,7 @@ object IncrementalStream {
   def nearCandidates(spark: SparkSession, streamDocs: DataFrame,
       sigStore: DataFrame, bandStore: DataFrame,
       minAgree: Int = DedupOps.IncrementalMinAgree): DataFrame =
-    DedupOps.bandedSigs(DedupOps.minhashSigsPerRow(spark, streamDocs))
+    DedupOps.bandedSigs(DedupOps.minhashSigsPerRow(streamDocs))
       .join(bandStore.select(col("band"), col("bkey"), col("doc_id").as("a_id")),
         Seq("band", "bkey"))
       .join(sigStore.select(col("doc_id").as("a_id"), col("sig").as("siga")), "a_id")

@@ -1,5 +1,7 @@
 package graft.tensor
 
+import graft.ops.MinUnionFind
+
 import org.apache.spark.sql.{GraftSql, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -185,25 +187,17 @@ object VoxelComponents {
     * 6-connected component, −1 where the input is −1. Union-find over the
     * sorted distinct cells; a neighbor is found by binary search for
     * `id + 2^22 / 2^11 / 1`, which cannot carry into the next field while
-    * every coordinate is below 2047. Roots are always the smaller index,
-    * so a root is its component's minimum id.
+    * every coordinate is below 2047. [[graft.ops.MinUnionFind]]'s roots
+    * are the smaller index, so a root is its component's minimum id.
     */
   def minIds(ids: Array[Long]): Array[Long] = {
     val cells = ids.filter(_ >= 0).distinct.sorted
-    val parent = Array.range(0, cells.length)
-    def find(a: Int): Int = {
-      var r = a
-      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-      r
-    }
+    val uf = new MinUnionFind(cells.length)
     for (k <- cells.indices; step <- Steps) {
       val j = java.util.Arrays.binarySearch(cells, cells(k) + step)
-      if (j >= 0) {
-        val (a, b) = (find(k), find(j))
-        if (a != b) parent(math.max(a, b)) = math.min(a, b)
-      }
+      if (j >= 0) uf.union(k, j)
     }
-    ids.map(v => if (v < 0) -1L else cells(find(java.util.Arrays.binarySearch(cells, v))))
+    ids.map(v => if (v < 0) -1L else cells(uf.find(java.util.Arrays.binarySearch(cells, v))))
   }
 }
 

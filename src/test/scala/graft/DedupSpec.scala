@@ -709,7 +709,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       .orderBy(desc("n_chars")).select("text").head().getString(0) * 3
     val pair = Seq((1L, doc), (2L, "INSERTED-PREFIX-XYZ " + doc))
       .toDF("doc_id", "text")
-    val chunks = quality.TextOps.cdcChunkTable(spark, pair).collect()
+    val chunks = quality.TextOps.cdcChunkTable(pair).collect()
     val a = chunks.filter(_.getLong(0) == 1L).map(_.getString(2)).toSeq
     val b = chunks.filter(_.getLong(0) == 2L).map(_.getString(2)).toSet
     assert(a.size >= 3, s"fixture produced only ${a.size} chunks")

@@ -77,8 +77,10 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
     val prop = Prop.forAll(Gen.choose(0L, Long.MaxValue)) { seed =>
       val rng = new Random(seed)
       val edges = randomGraph(rng)
-      val got = GraphOps.connectedComponents(edges.toDF("a", "b"), maxIter = ccRounds(edges),
-        dedupe = rng.nextBoolean()).as[(Long, Long)].collect().toMap
+      val got = spread(rng.nextBoolean()) {
+        GraphOps.connectedComponents(edges.toDF("a", "b"), dedupe = rng.nextBoolean())
+          .as[(Long, Long)].collect().toMap
+      }
       got == unionFindMin(edges)
     }
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(10).withInitialSeed(11L), prop)
@@ -89,47 +91,65 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     val prop = Prop.forAll(Gen.choose(0L, Long.MaxValue)) { seed =>
       // "v<id>" orders lexicographically, not numerically
-      val edges = randomGraph(new Random(seed)).map { case (a, b) => (s"v$a", s"v$b") }
-      val got = GraphOps.connectedComponents(edges.toDF("a", "b"), maxIter = ccRounds(edges),
-        dedupe = false).as[(String, String)].collect().toMap
+      val rng = new Random(seed)
+      val edges = randomGraph(rng).map { case (a, b) => (s"v$a", s"v$b") }
+      val got = spread(rng.nextBoolean()) {
+        GraphOps.connectedComponents(edges.toDF("a", "b"), dedupe = false)
+          .as[(String, String)].collect().toMap
+      }
       got == unionFindMin(edges)
     }
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(4).withInitialSeed(13L), prop)
     assert(res.passed, res.status.toString)
   }
 
-  test("CC runs exactly its rounds and throws when maxIter is too small") {
+  test("law: connectedComponents equals the union-find on 80–300-voxel snakes") {
     import spark.implicits._
-    val ids = new Random(5L).shuffle((0L until 10L).toVector)
-    val edges = ids.zip(ids.tail)
-    val rounds = ccRounds(edges)
-    assert(rounds >= 3, s"chain converges in $rounds rounds")
-    val df = edges.toDF("a", "b")
-    assert(GraphOps.connectedComponents(df, maxIter = rounds).as[(Long, Long)].collect().toMap ==
-      unionFindMin(edges))
-    Seq(1, rounds - 1).foreach { maxIter =>
-      val e = intercept[IllegalArgumentException] {
-        GraphOps.connectedComponents(df, maxIter = maxIter)
+    val prop = Prop.forAll(VoxelComponentsSpec.snake, Gen.oneOf(false, true)) { (g, spreadOut) =>
+      val cells = g.ids.filter(_ >= 0).toSet
+      val edges = for (c <- cells.toSeq; s <- Seq(1L << 22, 1L << 11, 1L) if cells(c + s)) yield (c, c + s)
+      val got = spread(spreadOut) {
+        GraphOps.connectedComponents(edges.toDF("a", "b"), dedupe = false).as[(Long, Long)].collect().toMap
       }
-      assert(e.getMessage.contains(s"labels still changing after $maxIter rounds"), e.getMessage)
+      got == unionFindMin(edges)
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(6).withInitialSeed(17L), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("CC throws when maxIter is below the levels a graph needs") {
+    import spark.implicits._
+    val ids = new Random(5L).shuffle((0L until 60L).toVector)
+    val edges = ids.zip(ids.tail)
+    val df = edges.toDF("a", "b")
+    spread(true) {
+      assert(GraphOps.connectedComponents(df).as[(Long, Long)].collect().toMap == unionFindMin(edges))
+      val e = intercept[IllegalArgumentException](GraphOps.connectedComponents(df, maxIter = 1))
+      assert(e.getMessage.contains("labels still changing after 1 rounds"), e.getMessage)
     }
   }
 
-  test("CC loop: each extra round costs the same constant number of jobs") {
+  test("CC runs a constant number of jobs on ordered chains of 3, 30 and 300 vertices") {
     import spark.implicits._
-    // chains in id order: round k leaves label v − (2^(k+1) − 2), so
-    // chains of 3, 7 and 15 vertices converge one round apart
-    val chains = Seq(3L, 7L, 15L).map(n => (1L until n).map(v => (v, v + 1)))
-    assert(chains.map(ccRounds(_)) == Seq(2, 3, 4))
-    val jobs = chains.zipWithIndex.map { case (edges, i) =>
-      val df = edges.toDF("a", "b")
-      jobsIn(s"cc_jobs_$i")(GraphOps.connectedComponents(df, dedupe = false).collect(): Unit)
+    // each chain fits one range partition, so one level labels it
+    val jobs = Seq(3L, 30L, 300L).map { n =>
+      val df = (1L until n).map(v => (v, v + 1)).toDF("a", "b")
+      jobsIn(s"cc_jobs_$n")(GraphOps.connectedComponents(df, dedupe = false).collect(): Unit)
     }
-    val perRound = jobs(1) - jobs(0)
-    assert(perRound > 0 && jobs(2) - jobs(1) == perRound,
-      s"jobs for 2, 3, 4 rounds: ${jobs.mkString(", ")}")
-    // two checkpoints (each a few AQE stage jobs) and one isEmpty job
-    assert(perRound <= 10, s"$perRound jobs per round")
+    assert(jobs.distinct.size == 1, s"jobs for 3, 30, 300 vertices: ${jobs.mkString(", ")}")
+    // input checkpoint, range sample, two shuffle stages, roots
+    // checkpoint, the contracted-edge check and the collect
+    assert(jobs.head <= 7, s"${jobs.head} jobs")
+  }
+
+  /** `body` with AQE's partition coalescing off when `on`: even a small
+    * graph then spreads over every range partition and needs contracted
+    * levels.
+    */
+  private def spread[A](on: Boolean)(body: => A): A = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    if (on) spark.conf.set(key, "false")
+    try body finally spark.conf.unset(key)
   }
 
   test("g1: integer arithmetic makes reruns bit-identical") {
@@ -144,13 +164,10 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
 object GraphSpec {
   /** At most 5 components over at most 300 of the ids 0..999: chains of
     * up to 60 vertices (ids in order along the chain, either way round,
-    * shuffled inside blocks of up to 4), chains of up to 10 with ids in
+    * shuffled inside blocks of up to 4), chains of up to 60 with ids in
     * random order, cliques of up to 8 and sparse random pieces of up to
     * 25, plus repeated edges, reversed repeats and self-loops, every edge
-    * in random orientation. Sized to converge in at most ~10 rounds: the
-    * loop's checkpoint size estimate squares every round, and past ~15
-    * rounds the planner's BigInt arithmetic alone takes minutes (a
-    * random-order 60-chain needs up to 47 rounds).
+    * in random orientation.
     */
   def randomGraph(rng: Random): Seq[(Long, Long)] = {
     val ids = rng.shuffle((0L until 1000L).toVector).iterator
@@ -165,7 +182,7 @@ object GraphSpec {
             val k = 1 + rng.nextInt(4)
             (rng.shuffle(r.take(k)), r.drop(k))
           }).flatten.toVector)
-        case 1 => path(take(2 + rng.nextInt(9)))
+        case 1 => path(take(2 + rng.nextInt(59)))
         case 2 => take(2 + rng.nextInt(7)).combinations(2).map(p => (p(0), p(1)))
         case _ =>
           val v = take(2 + rng.nextInt(24))
@@ -191,24 +208,5 @@ object GraphSpec {
       if (ord.lt(ra, rb)) parent(rb) = ra else if (ord.lt(rb, ra)) parent(ra) = rb
     }
     parent.keys.map(v => v -> find(v)).toMap
-  }
-
-  /** Rounds `GraphOps.connectedComponents` runs on `edges`, the final
-    * no-change round included: the same neighbor-min step and single
-    * pointer jump, replayed on the driver.
-    */
-  def ccRounds[T](edges: Seq[(T, T)])(implicit ord: Ordering[T]): Int = {
-    val adj = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
-    var label = adj.keys.map(v => v -> v).toMap
-    var rounds = 0
-    var changed = true
-    while (changed) {
-      val stepped = label.map { case (v, l) => v -> (l +: adj(v).map(label)).min }
-      val next = stepped.map { case (v, l) => v -> ord.min(l, stepped(l)) }
-      changed = next != label
-      label = next
-      rounds += 1
-    }
-    rounds
   }
 }

@@ -73,9 +73,9 @@ class IncrementalStreamSpec extends AnyFunSuite with SparkSuite {
 
   test("per-row signatures are bit-identical to the batch aggregate form") {
     val freshDf = fresh.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val perRow = DedupOps.minhashSigsPerRow(spark, freshDf)
+    val perRow = DedupOps.minhashSigsPerRow(freshDf)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val batch = DedupOps.minhashSignaturesOf(spark, freshDf)
+    val batch = DedupOps.minhashSignaturesOf(freshDf)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(perRow == batch, "per-row and batch signatures diverge")
   }

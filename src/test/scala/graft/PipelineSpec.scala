@@ -1,7 +1,9 @@
 package graft
 
 import graft.etl.{EventPipelines, EventTables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The reference's own invariants, ported as tests (SURVEY.md §5):
@@ -44,6 +46,24 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     val r = inst(0)
     assert(r.getAs[Long]("label") == 2L)
     assert(r.getAs[Long]("instance") == 3L)
+  }
+
+  test("law: the one-aggregation instance table equals the retained vote-join form") {
+    import spark.implicits._
+    // random long views: few events and instances so votes tie often
+    val prop = Prop.forAll(Gen.choose(0L, Long.MaxValue)) { seed =>
+      val rng = new scala.util.Random(seed)
+      val long = (0 until 1 + rng.nextInt(3)).flatMap { ev =>
+        (0 until 1 + rng.nextInt(40)).map { i =>
+          (1L, 0L, ev.toLong, i, rng.nextInt(9).toDouble, rng.nextInt(9) - 117.0,
+            rng.nextInt(9).toDouble, rng.nextInt(3).toLong, rng.nextInt(4).toLong)
+        }
+      }.toDF("run", "subrun", "event", "i", "x", "y", "z", "ssnet", "instance")
+      def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+      rows(EventPipelines.aggregateInstances(long)) == rows(RetainedForms.aggregateInstancesByJoin(long))
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(10).withInitialSeed(23L), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("instance table: ghost filter + shape law + y-shift") {

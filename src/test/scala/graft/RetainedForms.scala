@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Forms the engine replaced, kept only as the reference side of the law
@@ -56,5 +57,30 @@ object RetainedForms {
       .crossJoin(xy.agg(
         transform(array_sort(collect_list(struct(col("p"), col("q"), col("sxy")))),
           x => x.getField("sxy")).as("psum")))
+  }
+
+  /** The instance aggregation `EventPipelines.aggregateInstances`
+    * replaced: the vote as a (instance, ssnet) count groupBy with a
+    * row_number window, joined to a second groupBy collecting the
+    * members, so each consumer re-explodes the voxels. Reference side of
+    * the bit-for-bit law in PipelineSpec, over non-null labels: here a
+    * null label is one more vote value, sorting lowest.
+    */
+  def aggregateInstancesByJoin(long: DataFrame): DataFrame = {
+    val labelW = Window.partitionBy("run", "subrun", "event", "instance")
+    val labels = long.groupBy("run", "subrun", "event", "instance", "ssnet")
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn("rn", row_number().over(labelW.orderBy(col("cnt").desc, col("ssnet").asc)))
+      .filter(col("rn") === 1)
+      .select(col("run"), col("subrun"), col("event"), col("instance"),
+        col("ssnet").as("label"))
+    val clusters = long
+      .groupBy("run", "subrun", "event", "instance")
+      .agg(array_sort(collect_list(struct(col("i"), col("x"), col("y"), col("z")))).as("pts"))
+      .select(col("run"), col("subrun"), col("event"), col("instance"),
+        flatten(transform(col("pts"),
+          p => array(p.getField("x"), p.getField("y"), p.getField("z")))).as("instvoxcoord"),
+        array(size(col("pts")).cast("long"), lit(3L)).as("instvoxcoord_shape"))
+    clusters.join(labels, Seq("run", "subrun", "event", "instance"))
   }
 }

@@ -131,7 +131,7 @@ class ShuffleBudgetSpec extends AnyFunSuite with SparkSuite {
     // er1: trigram-block agg + candidate-pair distinct + the two
     // set-join sides feeding the Jaccard filter/sort
     "er1_fuzzy_match" -> 4,
-    // er2: CC rounds run eagerly; captured plan is the label join +
+    // er2: CC levels run eagerly; captured plan is the label join +
     // final sort over the (tiny) name vocabulary
     "er2_canonical_entities" -> 3,
     // ft1: per-(row,bucket) agg + final sort (hashing is map-side)
@@ -281,15 +281,14 @@ class ShuffleBudgetSpec extends AnyFunSuite with SparkSuite {
     "v5_keypoint_score" -> 2,
     "v5b_keypoint_gauss" -> 2,
     "v6_sce_lut" -> 1,
-    // v7: CC rounds run eagerly (localCheckpoint); captured plan is the
+    // v7: CC levels run eagerly (localCheckpoint); captured plan is the
     // label join + instance agg + sort
     "v7_voxel_instances" -> 4,
     // v8: fixture build (distinct + groupBy event), the event-index
-    // distinct + single-partition row_number, aggregateInstances'
-    // groupBys and join, final sort — shared subtrees counted once per
-    // consumer; components are found inside each event row, so no CC
-    // rounds or checkpoint
-    "v8_instance_cc" -> 13,
+    // distinct + single-partition row_number, aggregateInstances' one
+    // groupBy, final sort; components are found inside each event row,
+    // so no CC levels or checkpoint
+    "v8_instance_cc" -> 6,
     "w2_topk" -> 0,
     "w3_ntile" -> 1,
     // w3b: histogram agg + its single-partition cut window (≤1024-row

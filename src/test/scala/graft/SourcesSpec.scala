@@ -140,6 +140,23 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
       "re-upsert changed the merged state — not idempotent")
   }
 
+  test("k7 partitioned writes leave one file per month") {
+    // the rebalance hint clusters each month into one writer task, for
+    // the bootstrap write and the dynamic overwrite of touched months
+    etl.SinkOps.upsertDynamic(spark, sf).collect()
+    val src = new java.io.File(s"$sf/orders.parquet")
+    val base = new java.io.File(graft.etl.ScratchDirs.keyed(
+      s"k7_upsert_${src.length()}_${src.lastModified()}", sf), "orders_by_month")
+    val months = base.listFiles().filter(_.getName.startsWith("o_month="))
+    val want = Tables(spark, sf, "orders")
+      .select(date_format(col("o_orderdate"), "yyyy-MM")).distinct().count() + 1 // + 2002-01
+    assert(months.length == want, s"${months.length} month directories, want $want")
+    months.foreach { d =>
+      val n = d.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(n == 1, s"${d.getName} holds $n files")
+    }
+  }
+
   test("k8 compaction shrinks the file count without shuffling and preserves content") {
     val audit = etl.SinkOps.compactSmallFiles(spark, sf)
     // the compaction write is coalesce-only: no Exchange in its plan —

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The per-event component kernel behind `instanceTableCC`
   * (`voxel_components`): its labels equal an independent BFS flood fill
-  * and the global label-propagation CC (GraphOps.connectedComponents) on
+  * and the global CC (GraphOps.connectedComponents) on
   * random grids, snakes and chains of 80–300 voxels, duplicate
   * coordinates and ghosts; the packing guard keeps its edge (2046 passes,
   * 2047 fails as before); and the event path's plans carry no label array
@@ -58,7 +58,7 @@ class VoxelComponentsSpec extends AnyFunSuite with SparkSuite {
     grids.zipWithIndex.foreach { case (g, e) =>
       assert(got(e) == floodFill(g), s"event $e: kernel differs from the flood fill")
     }
-    // the propagation form over the same adjacency, all events in one
+    // the global CC over the same adjacency, all events in one
     // graph: global ids e·2^33 + packed, isolated cells label themselves
     import spark.implicits._
     val edges = grids.zipWithIndex.flatMap { case (g, e) =>
