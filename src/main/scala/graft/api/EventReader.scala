@@ -1,8 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSql, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** User-facing reader over one-row-per-event ragged-tensor parquet — the
   * Spark-native equivalent of the reference's reader/dataset classes
@@ -28,56 +28,55 @@ class EventReader(
     columns.map(cs => base.select(cs.map(col): _*)).getOrElse(base)
   }
 
-  /** Entry order: the reference relies on file order; Spark has no stable
-    * implicit order, so entries are ranked by the composite event key.
-    *
-    * Scale-safe ranking: a global `row_number() OVER (ORDER BY ...)`
-    * window funnels the whole table through ONE reducer; instead the
-    * table is range-partitioned on the key (globally ordered partitions),
-    * sorted within each partition, and indices are assigned from
-    * cumulative per-partition counts (`zipWithIndex` — one small count
-    * job, then a map). This is the distributed form of the reference's
-    * own `set_partition` offset math (larvoxel_dataset.py:196-201): no
-    * stage ever sees more than its partition.
-    *
-    * The composite key (run, subrun, event) is assumed UNIQUE per row —
-    * the reference's event files guarantee this (one row per detector
-    * event). Were keys duplicated, the order among ties (hence their
-    * `__entry` assignment) would be nondeterministic across computations.
-    *
-    * The indexed RDD is PERSISTED on first use: every access path here
-    * (`getEntry(i)`, each `partitionSlice`) is an action, and without
-    * persistence each one would re-run the full range-shuffle + sort +
-    * zipWithIndex. Call [[unpersistIndex]] to release the storage.
+  private val KeyCols = Seq("run", "subrun", "event")
+
+  /** Entry order: the composite event key (run, subrun, event), as Spark
+    * has no stable file order. Only the keys are ranked — range-partitioned
+    * (no single reducer), sorted per partition, collected in partition
+    * order — and held flat on the driver, 24 B per entry: entry `i` is key
+    * `i`, the reference's entry list plus offsets (readparquet.py:14-34,
+    * larvoxel_dataset.py:196-201). Keys must be projected and unique (one
+    * row per detector event); a duplicate fails the build, naming it.
     */
-  private lazy val indexedRdd = {
-    val keys = Seq(col("run"), col("subrun"), col("event"))
-    val sorted = df.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*)
-    sorted.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private lazy val index: Array[Long] = {
+    val ranked = df.select(KeyCols.map(c => col(c).cast("long").as(c)): _*)
+      .repartitionByRange(KeyCols.map(col): _*).sortWithinPartitions(KeyCols.map(col): _*)
+      .collect().flatMap(r => Array(r.getLong(0), r.getLong(1), r.getLong(2)))
+    ranked.grouped(3).map(_.toSeq).sliding(2).find(w => w.size == 2 && w.head == w.last).foreach(w =>
+      throw new IllegalStateException(s"duplicate event key (run, subrun, event) = (${w.head.mkString(", ")}) in $path"))
+    ranked
   }
 
-  private lazy val indexed: DataFrame = {
-    val schema = StructType(df.schema.fields :+
-      StructField("__entry", LongType, nullable = false))
-    spark.createDataFrame(indexedRdd, schema)
+  private def nkeys: Int = index.length / 3
+  private def key(i: Int): Seq[Long] = index.slice(3 * i, 3 * i + 3).toSeq
+
+  /** Rows whose key is in `ks`: a set test per key column (pushed to
+    * parquet as `In`, so row-group statistics prune) and one on the whole
+    * key. Sets, not inlined literals: every key set reuses one compiled class.
+    */
+  private def keyIn(ks: Seq[Seq[Long]]): Column = {
+    val cols = KeyCols.map(c => col(c).cast("long"))
+    cols.indices.map(j => GraftSql.inSet(cols(j), ks.map(_(j)).toSet[Any])).reduce(_ && _) &&
+      GraftSql.inSet(struct(cols: _*), ks.map(InternalRow.fromSeq).toSet[Any])
   }
 
-  /** Release the persisted entry index (no-op if never computed). */
-  def unpersistIndex(): Unit = indexedRdd.unpersist()
+  /** Entries at ascending positions `ps`, in entry order, from one scan;
+    * `ps.size` rows match, so the limit only makes the sort a top-k. */
+  private def entriesAt(ps: Seq[Int]): DataFrame =
+    if (ps.isEmpty) df.limit(0)
+    else df.filter(keyIn(ps.map(key))).orderBy(KeyCols.map(col): _*).limit(ps.size)
 
   lazy val nentries: Long = df.count()
 
-  /** Random access by entry index (P6, readparquet.py:14-34). */
+  /** Random access by entry index (P6, readparquet.py:14-34); `None` past the end. */
   def getEntry(i: Long): Option[Row] = {
     require(i >= 0, s"entry $i out of range")
-    indexed.filter(col("__entry") === i).drop("__entry").collect().headOption
+    if (i >= nkeys) None else { val k = key(i.toInt); getEntry(k(0), k(1), k(2)) }
   }
 
   /** Keyed lookup (P5, larmatch_dataset.py:137-142) — stat-pruned scan. */
   def getEntry(run: Long, subrun: Long, event: Long): Option[Row] =
-    df.filter(col("run") === run && col("subrun") === subrun && col("event") === event)
-      .collect().headOption
+    df.filter(keyIn(Seq(Seq(run, subrun, event)))).collect().headOption
 
   /** Bernoulli sample with retry (R1, larmatch_dataset.py:144-157). */
   def sampleEntry(seed: Long = 42L, nPerAttempt: Int = 10): Row = {
@@ -91,25 +90,25 @@ class EventReader(
     df.limit(1).collect()(0)
   }
 
-  /** Worker shard (W3 set_partition, larvoxel_dataset.py:196-201): rows
-    * [start, end) of the entry order for worker `w` of `n`.
+  /** Worker shard (W3 set_partition, larvoxel_dataset.py:196-201): entries
+    * [start, end) of the entry order for worker `w` of `n`, in that order.
     */
   def partitionSlice(w: Int, n: Int): DataFrame = {
     require(w >= 0 && w < n)
-    val per = (nentries + n - 1) / n
-    indexed.filter(col("__entry") >= w * per && col("__entry") < (w + 1) * per)
-      .drop("__entry")
+    val per = (nkeys + n - 1) / n
+    entriesAt(math.min(nkeys, w * per) until math.min(nkeys, (w + 1) * per))
   }
 
-  /** Epoch iterator (R3): deterministic order, optionally seeded-shuffled
-    * (R2, larvoxel_dataset.py:66-69).
-    */
+  /** Epoch iterator (R3): every entry once, in entry order or a seeded
+    * permutation (R2, larvoxel_dataset.py:66-69), one scan partition's
+    * worth of entries per fetch. */
   def epoch(shuffleSeed: Option[Long] = None): Iterator[Row] = {
-    val ordered = shuffleSeed match {
-      case Some(s) => df.orderBy(rand(s), col("run"), col("subrun"), col("event"))
-      case None => df.orderBy("run", "subrun", "event")
+    val all: IndexedSeq[Int] = 0 until nkeys
+    val order = shuffleSeed.fold[Seq[Int]](all)(s => new scala.util.Random(s).shuffle(all))
+    val batch = math.ceil(nkeys.toDouble / math.max(1, df.rdd.getNumPartitions)).toInt
+    order.grouped(math.max(1, batch)).flatMap { b =>
+      val at = b.sorted.zip(entriesAt(b.sorted).collect()).toMap
+      b.iterator.map(at)
     }
-    val it = ordered.toLocalIterator()
-    new Iterator[Row] { def hasNext = it.hasNext; def next() = it.next() }
   }
 }

@@ -49,17 +49,9 @@ object EventPipelines {
       .withColumn("vx", floor(col("x") / voxelSizeCm))
       .withColumn("vy", floor((col("y") + 117.0) / voxelSizeCm))
       .withColumn("vz", floor(col("z") / voxelSizeCm))
-    val counts = long.groupBy("run", "subrun", "event", "vx", "vy", "vz", "segment")
-      .agg(count(lit(1)).as("cnt"), sum(col("charge").cast("double")).as("q"))
-    val w = Window.partitionBy("run", "subrun", "event", "vx", "vy", "vz")
-    counts
-      .withColumn("rn", row_number().over(w.orderBy(col("cnt").desc, col("segment").asc)))
-      .withColumn("npts", sum(col("cnt")).over(w))
-      .withColumn("charge", sum(col("q")).over(w))
-      .filter(col("rn") === 1)
-      .select(col("run"), col("subrun"), col("event"),
-        col("vx"), col("vy"), col("vz"),
-        col("npts"), col("charge"), col("segment").as("ssnet"))
+    long.groupBy("run", "subrun", "event", "vx", "vy", "vz")
+      .agg(count(lit(1)).as("npts"), sum(col("charge").cast("double")).as("charge"),
+        mode(col("segment"), deterministic = true).as("ssnet"))
   }
 
   /** Shared long view of a voxel event table: one row per non-ghost
@@ -123,14 +115,17 @@ object EventPipelines {
     * packing is checked), i.e. the minimum of the global packed ids
     * (event-index ≪ 33 | ix ≪ 22 | iy ≪ 11 | iz) in the component;
     * isolated voxels label themselves. The event-index comes from a
-    * row_number over the DISTINCT (run, subrun, event) set —
+    * row_number over the DISTINCT (run, subrun, event) set of the events
+    * with a non-ghost voxel —
     * event-metadata cardinality, never voxels, the ev6 calendar-window
     * posture. Downstream is [[instanceTable]]'s own aggregation applied
     * to the derived grain.
     */
   def instanceTableCC(spark: SparkSession, voxels: DataFrame): DataFrame = {
     val long = voxelLong(voxels, "voxel_components(voxcoord, voxcoord_shape, voxlabel)")
-    val evs = long.select("run", "subrun", "event").distinct()
+    // the long view's events, read off the rows: union-find runs once per event
+    val evs = voxels.filter(exists(col("voxlabel"), _ === 1))
+      .select("run", "subrun", "event").distinct()
       .withColumn("evi",
         row_number().over(Window.orderBy("run", "subrun", "event")).cast("long"))
     // Coords must stay ≤ 2046: at 2047 a +1 neighbor no longer fits its

@@ -30,6 +30,44 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(voxPoints == trueCount)
   }
 
+  test("law: the one-aggregation voxelize equals the retained window form") {
+    import spark.implicits._
+    // random events in a small box, so voxels hold several points and
+    // segment votes tie often; labels are never null
+    val prop = Prop.forAll(Gen.choose(0L, Long.MaxValue)) { seed =>
+      val rng = new scala.util.Random(seed)
+      val ev = (0 until 1 + rng.nextInt(3)).map { e =>
+        val n = rng.nextInt(60)
+        def labels(k: Int) = Array.fill(n)(rng.nextInt(k).toLong)
+        EventTables.SpacepointEvent(1L, 0L, e.toLong,
+          Array.fill(4 * n)(rng.nextFloat() * 30f), Array(n.toLong, 4L),
+          labels(3).map(t => math.min(t, 1L)), Array(n.toLong), labels(4), Array(n.toLong),
+          labels(5), Array(n.toLong))
+      }.toDF()
+      def rows(df: DataFrame) = df.collect().map(r => (0 until 6).map(r.getLong) -> r).toMap
+      val got = rows(EventPipelines.voxelize(spark, ev, voxelSizeCm = 10.0))
+      val want = rows(RetainedForms.voxelizeByWindow(spark, ev, voxelSizeCm = 10.0))
+      got.keySet == want.keySet && got.forall { case (k, g) =>
+        val w = want(k)
+        // npts and the vote bit-identical; charge up to summation order
+        g.getLong(6) == w.getLong(6) && g.getLong(8) == w.getLong(8) &&
+          math.abs(g.getDouble(7) - w.getDouble(7)) <= 1e-9 * math.abs(w.getDouble(7))
+      }
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(10).withInitialSeed(29L), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("instanceTableCC: the event index counts only events with a non-ghost voxel") {
+    import spark.implicits._
+    def ev(event: Long, label: Long) = EventTables.VoxelEvent(1L, 0L, event,
+      Array(0L, 0L, 0L, 0L, 0L, 1L), Array(2L, 3L), Array.fill(6)(1f), Array(2L, 3L),
+      Array(label, label), Array(2L), Array(3L, 3L), Array(2L), Array(0L, 0L), Array(2L))
+    // event 5 is all ghosts, so event 7 is the first indexed event
+    val inst = EventPipelines.instanceTableCC(spark, Seq(ev(5L, 0L), ev(7L, 1L)).toDF()).collect()
+    assert(inst.map(r => (r.getAs[Long]("event"), r.getAs[Long]("instance"))).toSeq == Seq((7L, 1L << 33)))
+  }
+
   test("instance table: majority label with lowest-label tie-break") {
     import spark.implicits._
     // one event, one instance, ssnet labels {5,5,2,2,9}: counts tie 5 vs 2

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -82,5 +82,30 @@ object RetainedForms {
           p => array(p.getField("x"), p.getField("y"), p.getField("z")))).as("instvoxcoord"),
         array(size(col("pts")).cast("long"), lit(3L)).as("instvoxcoord_shape"))
     clusters.join(labels, Seq("run", "subrun", "event", "instance"))
+  }
+
+  /** The voxelization `EventPipelines.voxelize` replaced: a count and
+    * charge groupBy per (voxel, segment), then a window per voxel for the
+    * totals and a `row_number` over (count desc, segment asc) for the
+    * vote. Reference side of the law in PipelineSpec, over non-null
+    * segments: here a null segment is one more vote value, sorting lowest.
+    */
+  def voxelizeByWindow(spark: SparkSession, events: DataFrame, voxelSizeCm: Double): DataFrame = {
+    val long = graft.etl.EventPipelines.spacepointsLong(spark, events)
+      .filter(col("truetriplet") === 1)
+      .withColumn("vx", floor(col("x") / voxelSizeCm))
+      .withColumn("vy", floor((col("y") + 117.0) / voxelSizeCm))
+      .withColumn("vz", floor(col("z") / voxelSizeCm))
+    val counts = long.groupBy("run", "subrun", "event", "vx", "vy", "vz", "segment")
+      .agg(count(lit(1)).as("cnt"), sum(col("charge").cast("double")).as("q"))
+    val w = Window.partitionBy("run", "subrun", "event", "vx", "vy", "vz")
+    counts
+      .withColumn("rn", row_number().over(w.orderBy(col("cnt").desc, col("segment").asc)))
+      .withColumn("npts", sum(col("cnt")).over(w))
+      .withColumn("charge", sum(col("q")).over(w))
+      .filter(col("rn") === 1)
+      .select(col("run"), col("subrun"), col("event"),
+        col("vx"), col("vy"), col("vz"),
+        col("npts"), col("charge"), col("segment").as("ssnet"))
   }
 }
