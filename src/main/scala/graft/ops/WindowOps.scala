@@ -165,17 +165,17 @@ object WindowOps extends OpModule {
       }),
 
     // st2b — the same sessionization through Spark's NATIVE
-    // session_window aggregate (the batch run of the streaming-capable
-    // built-in; SessionStream's custom flatMapGroupsWithState remains the
-    // arbitrary-state escape hatch). Sessions are merged half-open
-    // [start, last + 30 min) event-time intervals, so the oracle's gap
-    // test in time order is >= (an event landing exactly at last + gap
-    // opens a NEW session) — unlike st2's strict > over event-id order.
+    // session_window aggregate (the batch run of the built-in that
+    // SessionStream.eventTimeSessions streams). Spark merges an event
+    // into the open session when it starts at or before last + 30 min,
+    // so an event exactly at last + gap JOINS the session: the oracle's
+    // gap test in time order is a strict > — st2's rule, but over ts
+    // order instead of event-id order.
     Q("st2b_session_window", Some(
       """WITH g AS (
         |  SELECT user_id,
         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |              >= 1800000000 THEN 1 ELSE 0 END AS new_s
+        |              > 1800000000 THEN 1 ELSE 0 END AS new_s
         |  FROM events)
         |SELECT user_id, CAST(sum(new_s) + 1 AS BIGINT) AS n_sessions, count(*) AS n_events
         |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin),

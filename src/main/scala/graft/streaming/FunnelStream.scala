@@ -107,14 +107,10 @@ object FunnelStream {
     * new rows arrive for that user (StreamingSpec replays the corpus
     * with its halves in REVERSED time order and pins equality with the
     * batch funnel).
-    */
-  def advanceBuffered(key: Long, rows: Iterator[FEvT],
-      state: GroupState[BufState]): Iterator[UserStage] =
-    advanceBufferedMetered(None)(key, rows, state)
-
-  /** [[advanceBuffered]] with an optional per-key peak-pending
-    * accumulator — the dd2/dd9 no-silent-caps posture applied to this
-    * operator's one unbounded-looking structure: the watermark buffer is
+    *
+    * The optional per-key peak-pending accumulator is the dd2/dd9
+    * no-silent-caps posture applied to this operator's one
+    * unbounded-looking structure: the watermark buffer is
     * bounded by a key's arrivals inside ONE delay window in a healthy
     * stream, but a bot user (or a stalled watermark) grows it without
     * limit, and total state rows would hide that one key. The

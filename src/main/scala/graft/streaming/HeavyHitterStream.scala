@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.ops.MisraGries
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of x16's Misra–Gries heavy hitters: frequency
   * tracking over an unbounded token stream with BOUNDED state — the
@@ -13,8 +13,8 @@ import org.apache.spark.sql.streaming._
   * Scale design: a single global summary would funnel every token to
   * one task, so the token space is hash-SHARDED (`pmod(xxhash64)`,
   * deterministic) and each shard key holds its own k-counter summary in
-  * `transformWithState` ValueState (RocksDB-backed, same provider the
-  * TwsSessionStream pins). Shards partition the token space, so the
+  * `flatMapGroupsWithState` GroupState (any state-store provider the
+  * session configures). Shards partition the token space, so the
   * global answer is the plain UNION of shard summaries — no cross-shard
   * merge rule needed — and each shard inherits the classic sequential
   * MG guarantee over ITS substream: `true − N_shard/(k+1) ≤ est ≤
@@ -37,23 +37,15 @@ object HeavyHitterStream {
   case class MgState(m: Map[String, Long], seq: Long)
   case class ShardSummary(shard: Int, seq: Long, token: String, est: Long)
 
-  class MgProcessor(k: Int) extends StatefulProcessor[Int, TokRow, ShardSummary] {
-    @transient private var st: ValueState[MgState] = _
-    private val mg = MisraGries(k)
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[MgState]("mg_summary",
-        Encoders.product[MgState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[TokRow],
-        timerValues: TimerValues): Iterator[ShardSummary] = {
-      val prior = if (st.exists()) st.get() else MgState(Map.empty, 0L)
-      var m = prior.m
-      rows.foreach(r => m = mg.reduce(m, r.token))
-      val next = MgState(m, prior.seq + 1)
-      st.update(next)
-      m.iterator.map { case (t, c) => ShardSummary(key, next.seq, t, c) }
-    }
+  /** One shard's micro-batch: fold the batch's tokens into the shard's
+    * summary and emit it under the next `seq`.
+    */
+  def foldShard(mg: MisraGries)(key: Int, rows: Iterator[TokRow],
+      state: GroupState[MgState]): Iterator[ShardSummary] = {
+    val prior = state.getOption.getOrElse(MgState(Map.empty, 0L))
+    val next = MgState(rows.foldLeft(prior.m)((m, r) => mg.reduce(m, r.token)), prior.seq + 1)
+    state.update(next)
+    next.m.iterator.map { case (t, c) => ShardSummary(key, next.seq, t, c) }
   }
 
   /** The sharded token stream from a staged documents directory (one
@@ -74,31 +66,21 @@ object HeavyHitterStream {
   }
 
   /** Run the sharded MG stream to completion over the staged files
-    * (memory sink; RocksDB provider forced for the query's lifetime and
-    * restored after). Returns every per-batch summary emission; the
-    * live answer is the max-`seq` row set per shard.
+    * (memory sink). Returns every per-batch summary emission; the live
+    * answer is the max-`seq` row set per shard.
     */
   def runToCompletion(spark: SparkSession, stagingDir: String,
       queryName: String, k: Int = 64, shards: Int = 8): DataFrame = {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val summaries = tokenStream(spark, stagingDir, shards)
-        .as[TokRow]
-        .groupByKey(_.shard)
-        .transformWithState(new MgProcessor(k), TimeMode.None(),
-          OutputMode.Update(), Encoders.product[ShardSummary])
-      val q = summaries.writeStream
-        .outputMode("update").format("memory").queryName(queryName).start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val summaries = tokenStream(spark, stagingDir, shards)
+      .as[TokRow]
+      .groupByKey(_.shard)
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
+        foldShard(MisraGries(k)))
+    val q = summaries.writeStream
+      .outputMode("update").format("memory").queryName(queryName).start()
+    q.processAllAvailable()
+    q.stop()
+    spark.table(queryName)
   }
 }

@@ -4,24 +4,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Stateful streaming sessionization via flatMapGroupsWithState — the
-  * custom-state path of SURVEY.md §2.11 (the streaming twin of the batch
-  * window query st2_sessionize). State per user is one (count, lastTs)
-  * pair: bounded regardless of stream length.
+/** Streaming sessionization (SURVEY.md §2.11), the streaming twins of
+  * the batch window queries st2_sessionize and st2b_session_window.
   *
-  * ORDERING CONTRACT: rows are sorted by event id only WITHIN each
-  * micro-batch, so the 30-min gap rule matches the batch twin exactly
-  * when the source delivers each user's events in event-id order across
-  * batches (one file, or files split on event-id boundaries — the
-  * StreamingSpec case). A source that interleaves a user's events across
-  * out-of-order micro-batches needs event-time state instead — that is
-  * [[sessionizeEventTime]] below (`EventTimeTimeout` + watermark-gated
-  * session close; spec-pinned equal to the batch sessions under a
-  * deliberately time-reversed cross-batch replay), at the cost of
-  * holding the open-session buffer until the watermark passes. The
-  * processing-order version stays the right default for replaying staged
-  * event logs, which arrive ordered; the event-time version is the scale
-  * path for live out-of-order sources.
+  * [[sessionizeMetered]] is the processing-order form on
+  * flatMapGroupsWithState: state per user is one (count, lastTs) pair,
+  * bounded regardless of stream length, and it emits without waiting
+  * for a watermark. ORDERING CONTRACT: rows are sorted by event id only
+  * WITHIN each micro-batch, so the 30-min gap rule matches the batch
+  * twin exactly when the source delivers each user's events in event-id
+  * order across batches (one file, or files split on event-id
+  * boundaries — the StreamingSpec case).
+  *
+  * A source that interleaves a user's events across out-of-order
+  * micro-batches needs event-time state instead: [[eventTimeSessions]],
+  * Spark's own `session_window` operator (spec-pinned equal to the
+  * batch sessions under a deliberately time-reversed cross-batch
+  * replay), at the cost of holding each open session until the
+  * watermark passes it.
   */
 object SessionStream {
 
@@ -31,27 +31,21 @@ object SessionStream {
 
   val GapUs: Long = 1800L * 1000000L // 30 min, matches st2_sessionize
 
-  def sessionize(
-      key: Long,
-      rows: Iterator[Ev],
-      state: GroupState[SessionState]): Iterator[UserSessions] =
-    sessionizeMetered(None)(key, rows, state)
-
-  /** [[sessionize]] with an optional per-key peak accumulator. The
+  /** The processing-order gap rule, with a per-key peak accumulator. The
     * `rows.toSeq` sort buffer is this operator's REAL memory bound — the
     * cross-batch GroupState is a fixed (count, lastTs) pair, but one hot
     * key's events within one micro-batch all materialize here, so that
     * count is the number a skew investigation needs (the streaming
     * mirror of IntervalJoinExec's peakBufferedRows SQLMetric).
     */
-  def sessionizeMetered(peak: Option[StateMetrics.MaxAccumulator])(
+  def sessionizeMetered(peak: StateMetrics.MaxAccumulator)(
       key: Long,
       rows: Iterator[Ev],
       state: GroupState[SessionState]): Iterator[UserSessions] = {
     // within a micro-batch rows are unordered; order by event id (the
     // reference's entry order) before applying the gap rule
     val sorted = rows.toSeq.sortBy(_.event_id)
-    peak.foreach(_.add(sorted.length.toLong))
+    peak.add(sorted.length.toLong)
     var st = state.getOption.getOrElse(SessionState(0L, Long.MinValue))
     var n = 0L
     sorted.foreach { e =>
@@ -63,93 +57,30 @@ object SessionStream {
     Iterator.single(UserSessions(key, st.nSessions, n))
   }
 
-  case class EvT(user_id: Long, event_id: Long, us: Long, ets: java.sql.Timestamp)
-  case class ClosedSession(user_id: Long, start_us: Long, n_events: Long)
-
-  /** EVENT-TIME sessionization — the out-of-order-safe variant this
-    * file's ordering contract (above) names as the scale path. Events
-    * buffer in `GroupState` until the WATERMARK proves a session closed:
-    * a gap-separated run whose `last + gap < watermark` can never gain
-    * or lose a member (any future arrival has `ts ≥ watermark`, which is
-    * past the gap), so it emits exactly once, regardless of how arrivals
-    * interleave across micro-batches. State per user is only the events
-    * of still-open sessions — bounded by the gap + allowed lateness
-    * window, NOT by stream length; `EventTimeTimeout` re-invokes the
-    * function when the watermark passes the open tail so quiet users
-    * still flush without new input.
+  /** EVENT-TIME sessions over a staged events directory: a watermarked
+    * `session_window` aggregate emitting one `(user_id, start_us,
+    * n_events)` row per CLOSED session in append mode. A session closes
+    * once the watermark passes its last event + [[GapUs]], after which
+    * no arrival can join it, so the output does not depend on how
+    * arrivals interleave across micro-batches. Sessions merge while the
+    * next event is at most [[GapUs]] after the last one — the batch gap
+    * rule. Returns the streaming frame: callers pick the sink and
+    * checkpoint, and can stage files between drains. On bounded input
+    * the last open sessions only flush if a later event advances the
+    * watermark past them; test fixtures plant a sentinel.
     */
-  def sessionizeEventTime(
-      key: Long,
-      rows: Iterator[EvT],
-      state: GroupState[List[Long]]): Iterator[ClosedSession] = {
-    val prior = state.getOption.getOrElse(Nil)
-    val buf = if (state.hasTimedOut) prior else prior ++ rows.map(_.us)
-    val sorted = buf.sorted
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    // split the sorted times into gap-separated sessions
-    val sessions = scala.collection.mutable.ListBuffer[Vector[Long]]()
-    var cur = Vector.empty[Long]
-    sorted.foreach { t =>
-      if (cur.nonEmpty && t - cur.last > GapUs) { sessions += cur; cur = Vector.empty }
-      cur = cur :+ t
-    }
-    if (cur.nonEmpty) sessions += cur
-    val (closed, open) = sessions.partition(s => s.last + GapUs < wmUs)
-    val remaining = open.flatten.toList
-    if (remaining.isEmpty) state.remove()
-    else {
-      state.update(remaining)
-      // wake when the watermark passes the open tail's close point (+1 ms
-      // so an exact-boundary timeout still satisfies `> watermark`)
-      state.setTimeoutTimestamp(remaining.max / 1000L + GapUs / 1000L + 1L)
-    }
-    closed.iterator.map(s => ClosedSession(key, s.head, s.length.toLong))
-  }
+  def eventTimeSessions(spark: SparkSession, dir: String,
+      watermark: String = "10 minutes"): DataFrame =
+    EventStream.eventStream(spark, dir)
+      .withWatermark("ts", watermark)
+      .groupBy(col("user_id"), session_window(col("ts"), s"$GapUs microseconds"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"), unix_micros(col("session_window.start")).as("start_us"),
+        col("n_events"))
 
-  /** Start the event-time sessionizer (memory sink, append mode): one
-    * output row per CLOSED session. Returns the running query + table
-    * name so callers can stage files between drains. On bounded input
-    * the final open sessions only flush if a later event advances the
-    * watermark past them — production streams advance naturally; test
-    * fixtures plant a sentinel.
-    */
-  def startEventTime(spark: SparkSession, dir: String, queryName: String,
-      watermark: String = "10 minutes")
-      : (org.apache.spark.sql.streaming.StreamingQuery, String) = {
-    import spark.implicits._
-    val evs = EventStream.eventStream(spark, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-        col("ts").as("ets"))
-      .withWatermark("ets", watermark)
-      .as[EvT]
-    val closed = evs
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        sessionizeEventTime)
-    val q = closed.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    (q, queryName)
-  }
-
-  /** Drain [[startEventTime]] over the (bounded) staged files. */
-  def runEventTimeToCompletion(spark: SparkSession, dir: String, queryName: String,
-      watermark: String = "10 minutes"): DataFrame = {
-    val (q, table) = startEventTime(spark, dir, queryName, watermark)
-    q.processAllAvailable()
-    q.stop()
-    spark.table(table)
-  }
-
-  /** Run the stateful sessionizer over a directory of events parquet and
-    * return the final per-user session counts (memory sink, bounded input).
-    */
-  def runToCompletion(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    runWithStateReport(spark, dir, queryName)._1
-
-  /** [[runToCompletion]] plus the state observability a production run
+  /** Run the processing-order sessionizer over a directory of events
+    * parquet and return the final per-user session counts (memory sink,
+    * bounded input) plus the state observability a production run
     * monitors: per-key peak batch buffering and state-store totals.
     */
   def runWithStateReport(spark: SparkSession, dir: String,
@@ -163,7 +94,7 @@ object SessionStream {
     val sessions = evs
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        sessionizeMetered(Some(peak)))
+        sessionizeMetered(peak))
     val q = sessions.writeStream
       .outputMode("update")
       .format("memory")

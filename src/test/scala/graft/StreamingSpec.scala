@@ -19,6 +19,43 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     java.nio.file.Files.copy(src, into.resolve(name))
   }
 
+  /** The batch gap rule the event-time sessionizer must reproduce: each
+    * user's events in ts order, a new session wherever the gap to the
+    * previous event exceeds [[graft.streaming.SessionStream.GapUs]].
+    * Returns the `(user_id, start_us, n_events)` session set.
+    */
+  private def gapSplitSessions(events: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("user_id").orderBy("us")
+    events.select(col("user_id"), unix_micros(col("ts")).as("us"))
+      .withColumn("new_s", when(col("us") - lag("us", 1).over(w) >
+        graft.streaming.SessionStream.GapUs || lag("us", 1).over(w).isNull, 1L).otherwise(0L))
+      .withColumn("sid", sum("new_s").over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .groupBy("user_id", "sid")
+      .agg(min("us").as("start_us"), count(lit(1)).as("n_events"))
+      .select("user_id", "start_us", "n_events").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+  }
+
+  /** Drain [[graft.streaming.SessionStream.eventTimeSessions]] over `in`,
+    * staging each file of `batches` before its own drain, and return
+    * the closed sessions as `(user_id, start_us, n_events)`.
+    */
+  private def replaySessions(in: java.nio.file.Path, watermark: String, queryName: String,
+      batches: Seq[() => Unit]): Set[(Long, Long, Long)] = {
+    batches.head()
+    val q = graft.streaming.SessionStream
+      .eventTimeSessions(spark, in.toString, watermark)
+      .writeStream.outputMode("append").format("memory").queryName(queryName).start()
+    q.processAllAvailable()
+    batches.tail.foreach { stage => stage(); q.processAllAvailable() }
+    q.stop()
+    spark.table(queryName).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+  }
+
   test("streaming hourly aggregate equals the batch window aggregate") {
     // the file stream source requires a directory — stage the single file
     val dir = java.nio.file.Files.createTempDirectory("stream_events")
@@ -269,7 +306,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // can't handle: each user's LATER events arrive in the FIRST batch.
     // The event-time version must still produce exactly the batch
     // sessions, because membership is decided by watermark, not arrival.
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     val NsM = 60L * 1000000000L
     val NsD = 24L * 3600L * 1000000000L
@@ -281,46 +317,36 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         EventStream.eventSchema)
     // u1: T0, T0+10m | gap | T0+50m  → 2 sessions (sizes 2, 1)
     // u2: T0+5m, T0+20m               → 1 session (size 2)
-    val early = Seq((1L, T0, 1L), (2L, T0 + 10 * NsM, 1L), (10L, T0 + 5 * NsM, 2L))
-    val late = Seq((3L, T0 + 50 * NsM, 1L), (11L, T0 + 20 * NsM, 2L))
+    // u3: T0, T0+30m | T0+60m+1µs     → 2 sessions (sizes 2, 1): an event
+    //     EXACTLY one gap after the last joins its session
+    val early = Seq((1L, T0, 1L), (2L, T0 + 10 * NsM, 1L), (10L, T0 + 5 * NsM, 2L),
+      (20L, T0, 3L))
+    val late = Seq((3L, T0 + 50 * NsM, 1L), (11L, T0 + 20 * NsM, 2L),
+      (21L, T0 + 30 * NsM, 3L), (22L, T0 + 60 * NsM + 1000L, 3L))
     val sentinel = Seq((99L, T0 + 10 * NsD, 99L)) // advances the watermark, closes all
     val in = java.nio.file.Files.createTempDirectory("evt_sess_in")
-    def stage(rows: Seq[(Long, Long, Long)], name: String): Unit = {
-      stageParquet(mkEvents(rows), in, name)
-    }
+    def stage(rows: Seq[(Long, Long, Long)], name: String): () => Unit =
+      () => stageParquet(mkEvents(rows), in, name)
     // REVERSED: the late events land in batch 1, the early ones in batch
     // 2, staged between drains (watermark 2h keeps the reversed arrivals
     // on-time; only the sentinel closes sessions)
-    stage(late, "0.parquet")
-    val (query, tableName) = graft.streaming.SessionStream
-      .startEventTime(spark, in.toString, "evt_sess_test", watermark = "2 hours")
-    query.processAllAvailable()
-    stage(early, "1.parquet")
-    query.processAllAvailable()
-    stage(sentinel, "2.parquet")
-    query.processAllAvailable()
-    query.stop()
-    val streamed = spark.table(tableName).collect()
-      .filter(_.getLong(0) != 99L)
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val streamed = replaySessions(in, "2 hours", "evt_sess_test", Seq(
+      stage(late, "0.parquet"), stage(early, "1.parquet"), stage(sentinel, "2.parquet")))
+      .filter(_._1 != 99L)
     // batch twin: gap-split sessions over the SAME events
-    import org.apache.spark.sql.expressions.Window
-    val all = mkEvents(early ++ late).select(col("user_id"),
-      expr("ts div 1000").as("us"))
-    val w = Window.partitionBy("user_id").orderBy("us")
-    val batch = all
-      .withColumn("new_s", when(col("us") - lag("us", 1).over(w) >
-        graft.streaming.SessionStream.GapUs || lag("us", 1).over(w).isNull, 1L).otherwise(0L))
-      .withColumn("sid", sum("new_s").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("user_id", "sid")
-      .agg(min("us").as("start_us"), count(lit(1)).as("n_events"))
-      .select("user_id", "start_us", "n_events").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed == batch)
+    assert(streamed == gapSplitSessions(graft.EventTs.normalize(mkEvents(early ++ late))))
     assert(streamed == Set(
       (1L, T0 / 1000, 2L), (1L, (T0 + 50 * NsM) / 1000, 1L),
-      (2L, (T0 + 5 * NsM) / 1000, 2L)))
+      (2L, (T0 + 5 * NsM) / 1000, 2L),
+      (3L, T0 / 1000, 2L), (3L, (T0 + 60 * NsM) / 1000 + 1L, 1L)))
+    // st2b, the batch session_window query, counts the same sessions:
+    // u3's exact-gap event joins, which its oracle states as a strict >
+    val batchDir = java.nio.file.Files.createTempDirectory("st2b_gap")
+    mkEvents(early ++ late).write.parquet(batchDir.resolve("events.parquet").toString)
+    val st2b = ops.WindowOps.qs.find(_.name == "st2b_session_window").get
+      .fn(spark, batchDir.toString).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(st2b == Set((1L, 2L, 3L), (2L, 1L, 2L), (3L, 2L, 3L)))
   }
 
   test("stream-stream interval join equals the batch st3_interval_join twin") {
@@ -596,46 +622,35 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(got.toSet == want)
   }
 
-  test("transformWithState sessionization equals flatMapGroupsWithState under a time-reversed replay") {
-    // the SAME out-of-order fixture the event-time GroupState test uses,
-    // run through Spark 4's transformWithState (named ValueState +
-    // explicit event-time timers, RocksDB-backed by API requirement):
-    // both implementations must close exactly the batch sessions.
+  test("event-time sessionization of the events table under a REVERSED-halves replay equals the batch sessions") {
+    // the real table, its later half (by ts) staged first, its earlier
+    // half a drain later, then a sentinel far past every event that
+    // advances the watermark and closes every session
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.Row
-    val NsM = 60L * 1000000000L
-    val NsD = 24L * 3600L * 1000000000L
-    val T0 = 1600000000L * 1000000000L
-    def mkEvents(rows: Seq[(Long, Long, Long)]) =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.map { case (id, ts, u) =>
-          Row(id, ts, u, "click", 0.0, "{}") }, 1),
-        EventStream.eventSchema)
-    val early = Seq((1L, T0, 1L), (2L, T0 + 10 * NsM, 1L), (10L, T0 + 5 * NsM, 2L))
-    val late = Seq((3L, T0 + 50 * NsM, 1L), (11L, T0 + 20 * NsM, 2L))
-    val sentinel = Seq((99L, T0 + 10 * NsD, 99L))
-    val in = java.nio.file.Files.createTempDirectory("tws_sess_in")
-    def stage(rows: Seq[(Long, Long, Long)], name: String): Unit =
-      stageParquet(mkEvents(rows), in, name)
-    // REVERSED cross-batch arrival: each user's LATER events land in
-    // batch 1, the earlier ones (plus the watermark-advancing sentinel)
-    // after the first drain — membership must still be decided by
-    // watermark, not arrival order
-    stage(late, "0.parquet")
-    val tws = graft.streaming.TwsSessionStream.runToCompletion(
-      spark, in.toString, "tws_sess_test", watermark = "2 hours",
-      stageBetween = Some(() => { stage(early, "1.parquet"); stage(sentinel, "2.parquet") }))
-      .collect().filter(_.getLong(0) != 99L)
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // GroupState twin over the same files, same replay shape
-    val gs = graft.streaming.SessionStream.runEventTimeToCompletion(
-      spark, in.toString, "tws_gs_twin", watermark = "2 hours")
-      .collect().filter(_.getLong(0) != 99L)
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(tws == gs, s"transformWithState $tws != GroupState twin $gs")
-    assert(tws == Set(
-      (1L, T0 / 1000, 2L), (1L, (T0 + 50 * NsM) / 1000, 1L),
-      (2L, (T0 + 5 * NsM) / 1000, 2L)))
+    val ev = graft.Tables(spark, sf, "events")
+    val (minTs, maxTs, mid) = {
+      val r = ev.agg(min("ts"), max("ts"),
+        expr("timestamp_micros(cast(avg(unix_micros(ts)) as long))")).head()
+      (r.getTimestamp(0), r.getTimestamp(1), r.getTimestamp(2))
+    }
+    // a delay longer than the table's span keeps the early half on time
+    val spanSec = (maxTs.getTime - minTs.getTime) / 1000 + 3600
+    val in = java.nio.file.Files.createTempDirectory("evt_sess_sf_in")
+    val streamed = replaySessions(in, s"$spanSec seconds", "evt_sess_sf_test", Seq(
+      () => stageParquet(ev.filter(col("ts") > mid), in, "0.parquet"),
+      () => stageParquet(ev.filter(col("ts") <= mid), in, "1.parquet"),
+      () => stageParquet(ev.limit(1).withColumn("user_id", lit(-1L))
+        .withColumn("ts", lit(new java.sql.Timestamp(maxTs.getTime + 2L * spanSec * 1000))),
+        in, "2.parquet")))
+      .filter(_._1 >= 0)
+    assert(streamed.nonEmpty)
+    assert(streamed == gapSplitSessions(ev))
+    // per user: as many sessions and events as the batch st2_sessionize
+    val perUser = streamed.groupBy(_._1).map { case (u, ss) =>
+      u -> (ss.size.toLong, ss.toSeq.map(_._3).sum) }
+    val batch = ops.WindowOps.qs.find(_.name == "st2_sessionize").get.fn(spark, sf)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(perUser == batch)
   }
 
   test("RocksDB state store: the production state backend produces the identical aggregate") {
@@ -652,7 +667,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val default = EventStream.runToCompletion(spark, dir.toString, "rocks_base")
       .collect().map(_.toString).sorted
     // snapshot/restore rather than unset: a pre-set providerClass on the
-    // shared session must survive this test (TwsSessionStream pattern)
+    // shared session must survive this test (the one place a spec or the
+    // library sets the provider)
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
